@@ -1,7 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import java.lang.ref.WeakReference
+
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, LeafNode, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.StructType
 
 import graft.messages.{River, Routed}
 
@@ -21,6 +29,17 @@ import graft.messages.{River, Routed}
   * memory-resident rows, not another source scan, and each river keeps its
   * own fast-path parse exactly as in the per-query mode.
   *
+  * The river plans are built and analyzed ONCE per query, not per trigger.
+  * The first trigger for a (registration list, batch schema, session)
+  * compiles the unioned reply plan over placeholder leaves ([[Slot]]) into
+  * an analyzed template; every trigger then binds its persisted batch into
+  * each slot and hands the sink a frame over the bound plan, which Spark
+  * only optimizes and plans. Otherwise a foreachBatch body pays the build
+  * and analysis of about ten Dataset constructions per river on every
+  * trigger — the cost that set the rapid's reply latency. Structured Streaming queries
+  * analyze their plan once the same way; a foreachBatch body is outside
+  * that machinery, so the fanout does it itself.
+  *
   * Error semantics come free: any river's flow throwing inside foreachBatch
   * fails THE query, which is the reference's one-dead-listener-stops-the-app
   * contract (RapidIntegrationTest.kt:126-141) without cross-query
@@ -36,81 +55,155 @@ object Fanout {
 
   /** One registered river and its reply flow. `name` labels the river's
     * metrics (the reference's per-listener counter tags).
+    *
+    * `flow` is a plan builder: it runs once per query (per batch schema),
+    * over a placeholder of the micro-batch, and its plan then serves every
+    * trigger. So a flow must build its reply from its routed input alone:
+    * an action inside a flow (collect, count, an `Observation` of its own)
+    * is unsupported, and values a flow computes in Scala when it runs are
+    * fixed for the query's life — per-trigger values belong in expressions
+    * such as `current_timestamp()`, which each trigger evaluates anew.
+    * Analysis-time confs are fixed at query start, as for any streaming
+    * query definition.
     */
   final case class Registration(river: River, flow: Routed => DataFrame,
       name: String = "river")
 
   /** Route one micro-batch (columns: key, value, plus any source metadata)
-    * through every registration off a single persisted scan, passing each
-    * river's reply DataFrame to `sink`. The persist is scoped to the batch:
-    * released before the micro-batch commits, so state never accumulates
-    * across triggers. Each flow passes the same [[rejectStateful]] guard as
-    * the unioned/observed forms — a caller reaching for the per-river-sink
-    * variant gets the same loud error instead of silent per-batch state
-    * resets.
-    */
-  def routeBatch(batch: DataFrame, regs: Seq[Registration])(
-      sink: DataFrame => Unit): Unit = {
-    batch.persist()
-    try regs.foreach { r =>
-      sink(rejectStateful(r.flow(r.river.attach(batch, col("value"))), r.name))
-    }
-    finally { batch.unpersist(); () }
-  }
-
-  /** Like [[routeBatch]] but hands the sink ONE unioned (key, value) reply
-    * frame for the whole batch instead of one frame per river: a single
-    * Spark job shares the persisted batch across every river's plan, and —
-    * on Kafka — ONE producer write per trigger instead of R sequential
-    * writes. Error semantics are identical (any river's branch failing
-    * fails the one action, downing the query). No-op when no rivers are
+    * through every registration off a single persisted scan, handing the
+    * sink ONE unioned (key, value) reply frame: a single Spark job shares
+    * the persisted batch across every river's plan, and — on Kafka — ONE
+    * producer write per trigger instead of R sequential writes. The persist
+    * is scoped to the batch: released before the micro-batch commits, so
+    * state never accumulates across triggers. Any river's branch failing
+    * fails the one action, downing the query. No-op when no rivers are
     * registered. This is the production hot path: no per-river metric
     * machinery — use [[routeBatchObserved]] for that.
     */
   def routeBatchUnioned(batch: DataFrame, regs: Seq[Registration])(
       sink: DataFrame => Unit): Unit = {
-    batch.persist()
-    try {
-      val replies = regs.map { r =>
-        rejectStateful(r.flow(r.river.attach(batch, col("value"))), r.name)
-          .select(col("key").cast("string").as("key"), col("value").cast("string").as("value"))
-      }
-      replies.reduceOption(_.unionAll(_)).foreach(sink)
-    } finally { batch.unpersist(); () }
+    route(batch, regs, observe = false)(sink)
+    ()
   }
 
   /** [[routeBatchUnioned]] + per-river routing metrics — the reference's
     * per-listener message_counter survives the single-scan mode: each
     * river's branch carries an `observe` node (a row-pass-through over its
     * routed split), so the ONE unioned action fires every river's counters
-    * with zero extra Spark jobs. Returns (registration name -> this batch's
+    * with zero extra Spark jobs. Each trigger attaches fresh observations
+    * to the same compiled plan. Returns (registration name -> this batch's
     * metric row: messages / passed / precondition_failed /
     * validation_failed / unparseable + the river's declared tag counters);
     * empty when there were no registrations (no action ran, and the sink
     * was never invoked).
     */
   def routeBatchObserved(batch: DataFrame, regs: Seq[Registration])(
-      sink: DataFrame => Unit): Seq[(String, Map[String, Any])] = {
-    batch.persist()
-    try {
-      val observations = regs.map(_ => new Observation())
-      val replies = regs.zip(observations).map { case (r, o) =>
-        val routed = r.river.attach(batch, col("value"))
-        // the flow reads THROUGH the observe node so the union's single
-        // action executes it; metrics describe the routed stream, and the
-        // flow's own filters (e.g. .passed) sit above the observation
-        rejectStateful(r.flow(routed.copy(all = routed.observed(o))), r.name)
-          .select(col("key").cast("string").as("key"), col("value").cast("string").as("value"))
+      sink: DataFrame => Unit): Seq[(String, Map[String, Any])] =
+    route(batch, regs, observe = true)(sink)
+
+  private def route(batch: DataFrame, regs: Seq[Registration], observe: Boolean)(
+      sink: DataFrame => Unit): Seq[(String, Map[String, Any])] =
+    if (regs.isEmpty) Nil
+    else {
+      val template = compiled(batch, regs, observe)
+      batch.persist()
+      try {
+        val observations = template.metrics.map(_ => new Observation())
+        sink(template.bind(batch, observations))
+        // safe to block: the sink's action completed, so every branch's
+        // observation is resolved
+        regs.map(_.name).zip(observations.map(_.get))
+      } finally { batch.unpersist(); () }
+    }
+
+  /** The placeholder a template's river plans are built over: a leaf with
+    * the batch's schema that [[Template.bind]] replaces. The analyzer gives
+    * every union branch after the first its own copy (relation dedup,
+    * through `newInstance`), so binding replaces every Slot, not one
+    * instance.
+    */
+  private final case class Slot(output: Seq[Attribute])
+      extends LeafNode with MultiInstanceRelation {
+    override def newInstance(): LogicalPlan = copy(output = output.map(_.newInstance()))
+  }
+
+  /** The analyzed unioned reply plan of one (registration list, batch
+    * schema, session), over [[Slot]] leaves. `metrics` holds, per
+    * registration, the name and dataframe id of its observe node (empty
+    * when not observed). Holds no batch, and only a weak reference to the
+    * session.
+    */
+  private final class Template(val session: WeakReference[SparkSession],
+      val schema: StructType, val observe: Boolean, plan: LogicalPlan,
+      val metrics: Seq[(String, Long)]) {
+
+    /** The reply frame of one batch: every slot becomes the batch's
+      * analyzed plan under a projection keeping the slot's attribute ids,
+      * and each observe node takes its observation's name, registered
+      * fresh for this action. The result is resolved by construction, so
+      * it is not analyzed again.
+      */
+    def bind(batch: DataFrame, observations: Seq[Observation]): DataFrame = {
+      val source = batch.queryExecution.analyzed
+      val names = metrics.map(_._1).zip(observations.map(_.name)).toMap
+      // up, not down: a slot's replacement holds the batch plan, which has
+      // no slot to visit
+      val bound = plan.transformUp {
+        case Slot(output) =>
+          Project(output.zip(source.output).map { case (slot, in) =>
+            Alias(in, slot.name)(exprId = slot.exprId)
+          }, source)
+        case c: CollectMetrics if names.contains(c.name) => c.copy(name = names(c.name))
       }
-      replies.reduceOption(_.unionAll(_)) match {
-        case Some(all) =>
-          sink(all)
-          // safe to block: the sink's action completed, so every branch's
-          // observation is resolved
-          regs.zip(observations).map { case (r, o) => r.name -> o.get }
-        case None => Nil
+      metrics.zip(observations).foreach { case ((_, id), o) =>
+        Bridge.registerObservation(batch.sparkSession, o, id)
       }
-    } finally { batch.unpersist(); () }
+      Bridge.ofAnalyzed(batch.sparkSession, bound)
+    }
+  }
+
+  /** Templates per registration list. Weak keys: a stopped query's
+    * registrations leave with it, and each template holds its session
+    * weakly, so neither stays reachable through this cache.
+    */
+  private val templates = new java.util.WeakHashMap[Seq[Registration], List[Template]]()
+
+  private def compiled(batch: DataFrame, regs: Seq[Registration], observe: Boolean): Template = {
+    val session = batch.sparkSession
+    val schema = batch.schema
+    def live = templates.synchronized(Option(templates.get(regs)).getOrElse(Nil))
+      .filter(_.session.get != null)
+    live.find(t => (t.session.get eq session) && t.schema == schema && t.observe == observe)
+      .getOrElse {
+        val t = compile(session, schema, regs, observe)
+        templates.synchronized { templates.put(regs, t :: live); () }
+        t
+      }
+  }
+
+  private def compile(session: SparkSession, schema: StructType, regs: Seq[Registration],
+      observe: Boolean): Template = {
+    val slot = Bridge.ofAnalyzed(session, Slot(DataTypeUtils.toAttributes(schema)))
+    val tag = java.util.UUID.randomUUID()
+    val names = regs.indices.map(i => s"fanout-$tag-$i")
+    val replies = regs.zip(names).map { case (r, metric) =>
+      val routed = r.river.attach(slot, col("value"))
+      // the flow reads THROUGH the observe node so the union's single
+      // action executes it; metrics describe the routed stream, and the
+      // flow's own filters (e.g. .passed) sit above the observation
+      val in = if (observe) routed.copy(all = routed.observed(metric)) else routed
+      rejectStateful(r.flow(in), r.name)
+        .select(col("key").cast("string").as("key"), col("value").cast("string").as("value"))
+    }
+    val plan = replies.reduce(_.unionAll(_)).queryExecution.analyzed
+    val ids = plan.collect { case c: CollectMetrics => c.name -> c.dataframeId }.toMap
+    val metrics = if (!observe) Nil else regs.zip(names).map { case (r, metric) =>
+      require(ids.contains(metric),
+        s"fanout river '${r.name}' must build its replies from its routed input " +
+          "(its routing metrics observe that input)")
+      metric -> ids(metric)
+    }
+    new Template(new WeakReference(session), schema, observe, plan, metrics)
   }
 
   /** Approximate per-river cost attribution for the fused fanout action.

@@ -152,6 +152,12 @@ final class KafkaRapid(spark: SparkSession, config: KafkaRapidConfig) {
     * cost that dominates at a 100 TB topic. Any river's flow throwing fails
     * this query: one dead listener stops the app
     * (RapidIntegrationTest.kt:126-141).
+    *
+    * Each flow is a plan builder and runs once per query: the first trigger
+    * builds and analyzes every river plan, and later triggers bind their
+    * batch into that plan ([[Fanout.Registration]]). Actions inside a flow
+    * are unsupported, and analysis-time confs are fixed at query start, as
+    * for any streaming query definition.
     */
   def run(regs: Seq[Fanout.Registration]): org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream

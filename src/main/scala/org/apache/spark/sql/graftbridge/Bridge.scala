@@ -1,7 +1,9 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Column <-> Expression bridge. Spark 4 split Column off from Catalyst
@@ -43,4 +45,27 @@ object Bridge {
   def clearCaches(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager.clearCache()
+
+  /** A DataFrame over a plan that is ALREADY resolved, without running the
+    * analyzer on it again: the plan is marked analyzed, and the analyzer
+    * returns a marked plan as is. The caller guarantees the plan is what
+    * the analyzer would return — built from analyzed parts by rewrites
+    * that keep it resolved (graft.streaming.Fanout binds each micro-batch
+    * into an analyzed template this way). `Dataset.ofRows` is sql-private.
+    */
+  def ofAnalyzed(spark: SparkSession, plan: LogicalPlan): DataFrame = {
+    plan.setAnalyzed()
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+  }
+
+  /** Register `observation` for the CollectMetrics node named like it under
+    * `dataframeId`: the session completes it when an action over a plan
+    * holding that node succeeds. What `Dataset.observe(observation, ...)`
+    * does, for a node already in a plan (the ObservationManager is
+    * sql-private).
+    */
+  def registerObservation(spark: SparkSession, observation: Observation,
+      dataframeId: Long): Unit =
+    spark.asInstanceOf[classic.SparkSession].observationManager
+      .register(observation, dataframeId)
 }

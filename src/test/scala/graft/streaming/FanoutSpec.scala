@@ -1,10 +1,21 @@
 package graft.streaming
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Encoder}
+import org.apache.spark.sql.execution.UnionExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.messages.{River, Validation}
+import graft.messages.{River, Routed, Validation}
 
 /** Single-scan fanout mode (Fanout / MemoryRapid(fanout = true)): the
   * reference reads each record once and notifies every listener
@@ -12,10 +23,36 @@ import graft.messages.{River, Validation}
   * N rivers, every message seen by each, exactly ONE streaming query whose
   * input rows are counted once.
   */
-class FanoutSpec extends AnyFunSuite {
+class FanoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private def eventRiver(name: String) =
     River().precondition(Validation.requireValue("@event_name", name))
+
+  /** Registrations whose flows count how often they are built. */
+  private def counted(rivers: Seq[River])(flow: Int => Routed => DataFrame)
+      : (Seq[Fanout.Registration], Seq[AtomicInteger]) = {
+    val builds = rivers.map(_ => new AtomicInteger())
+    val regs = rivers.indices.map { i =>
+      Fanout.Registration(rivers(i), { r => builds(i).incrementAndGet(); flow(i)(r) }, s"r$i")
+    }
+    (regs, builds)
+  }
+
+  /** A (key, value) MemoryStream query whose foreachBatch runs `onBatch`. */
+  private def fanoutQuery(name: String)(onBatch: DataFrame => Unit)
+      : (MemoryStream[(String, String)], StreamingQuery) = {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val input = MemoryStream[(String, String)](
+      implicitly[Encoder[(String, String)]], spark)
+    val q = input.toDF().toDF("key", "value").writeStream.queryName(name)
+      .foreachBatch { (b: DataFrame, _: Long) => onBatch(b) }
+      .start()
+    (input, q)
+  }
+
+  private def pairs(df: DataFrame): Seq[(String, String)] =
+    df.collect().map(r => (r.getString(0), r.getString(1))).toSeq.sorted
 
   test("N rivers see every message off ONE query with one input scan") {
     val spark = TestSpark.spark
@@ -151,6 +188,145 @@ class FanoutSpec extends AnyFunSuite {
     assert(rapid.isRunning) // registered, nothing failed
     rapid.stop()            // stopped before any send: no query ever existed
     assert(!rapid.isRunning, "a drained rapid must not report alive")
+  }
+
+  test("routeBatchUnioned builds the river plans once per query and binds every trigger into them") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    Bridge.clearCaches(spark)
+    // a fast-path river, a variant-path river (dotted key) and a catch-all:
+    // three attach shapes in one union
+    val rivers = Seq(
+      eventRiver("a"),
+      eventRiver("b").validate(Validation.requireKey("@løsning.x")),
+      River().validate(Validation.requireKey("@event_name")))
+    def reply(i: Int)(r: Routed): DataFrame =
+      r.passed.select(col("key"), concat(lit(s"r$i:"), col("value")).as("value"))
+    val (regs, builds) = counted(rivers)(reply)
+    final case class Trigger(partitions: Int, got: Seq[(String, String)], branches: Int,
+        cachedBranches: Int, uncached: Boolean)
+    val triggers = mutable.ArrayBuffer.empty[Trigger]
+    // the batch is read by the routing action alone, so numInputRows counts
+    // each message once; the reference is built after the query, off the
+    // messages each trigger was sent
+    val (input, q) = fanoutQuery("fanout-bound") { b =>
+      var got = Seq.empty[(String, String)]
+      var branches, cachedBranches = -1
+      Fanout.routeBatchUnioned(b, regs) { replies =>
+        got = pairs(replies)
+        val unions = collect(replies.queryExecution.executedPlan) { case u: UnionExec => u }
+        branches = unions.map(_.children.size).sum
+        cachedBranches = unions.flatMap(_.children)
+          .count(c => collect(c) { case s: InMemoryTableScanExec => s }.nonEmpty)
+      }
+      triggers.synchronized {
+        triggers += Trigger(b.rdd.getNumPartitions, got, branches, cachedBranches,
+          Bridge.noCachedPlans(spark))
+      }
+    }
+    try {
+      val a = """{"@event_name":"a"}"""
+      val b = """{"@event_name":"b","@løsning":{"x":1}}"""
+      val sends = Seq(
+        Seq(Seq("k1" -> a, "k2" -> b, "k3" -> """{"@event_name":"b"}""", "k4" -> "{oops")),
+        Seq(Seq.empty),
+        Seq(Seq("k5" -> "{", "k6" -> "[1,2]", "k7" -> "not json")),
+        // three blocks before one trigger: a batch of three partitions
+        Seq(Seq("k8" -> a), Seq("k9" -> b), Seq("k10" -> """{"@event_name":"c"}""")))
+      sends.foreach { blocks =>
+        blocks.foreach(block => input.addData(block))
+        q.processAllAvailable()
+      }
+      assert(triggers.size == sends.size, s"one trigger per send, got ${triggers.size}")
+      assert(q.recentProgress.map(_.numInputRows).sum == sends.flatten.flatten.size.toLong)
+      triggers.zip(sends).zipWithIndex.foreach { case ((t, sent), i) =>
+        // the reference: every river attached to this trigger's messages,
+        // built afresh
+        val batch = sent.flatten.toDF("key", "value")
+        val want = pairs(rivers.indices.map(j => reply(j)(rivers(j).attach(batch, col("value"))))
+          .reduce(_.unionAll(_)))
+        assert(t.got == want, s"trigger $i: replies differ from the per-batch reference")
+        assert(t.branches == rivers.size && t.cachedBranches == rivers.size,
+          s"trigger $i: ${t.cachedBranches} of ${t.branches} branches read the persisted batch")
+        assert(t.uncached, s"trigger $i left a cached plan behind")
+      }
+      assert(triggers.head.got.map(_._2).sorted == Seq(s"r0:$a", s"r1:$b", s"r2:$a", s"r2:$b",
+        """r2:{"@event_name":"b"}""").sorted)
+      assert(triggers(3).got.size == 5)
+      assert(triggers(3).partitions != triggers.head.partitions,
+        s"expected a different partition count, got ${triggers.map(_.partitions)}")
+      assert(builds.map(_.get) == rivers.map(_ => 1), "each flow must be built once per query")
+      assert(q.recentProgress.map(_.numInputRows).sum == sends.flatten.flatten.size.toLong)
+    } finally q.stop()
+  }
+
+  test("a bound trigger stamps current_timestamp() with its own time") {
+    val (regs, _) = counted(Seq(eventRiver("a"))) { _ => r =>
+      Republish(r.passed.select(col("key"), col("value")), Nil, "svc", "inst")
+    }
+    val stamps = mutable.ArrayBuffer.empty[java.time.LocalDateTime]
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper
+    val (input, q) = fanoutQuery("fanout-now") { b =>
+      Fanout.routeBatchUnioned(b, regs) { replies =>
+        stamps.synchronized {
+          stamps ++= pairs(replies).map(p =>
+            java.time.LocalDateTime.parse(mapper.readTree(p._2).path("@opprettet").asText()))
+        }
+      }
+    }
+    try {
+      input.addData(Seq("k1" -> """{"@event_name":"a"}"""))
+      q.processAllAvailable()
+      Thread.sleep(1100)
+      input.addData(Seq("k2" -> """{"@event_name":"a"}"""))
+      q.processAllAvailable()
+      assert(stamps.size == 2, s"got $stamps")
+      assert(java.time.Duration.between(stamps(0), stamps(1)).toMillis >= 1000,
+        s"the second trigger reused the first one's time: $stamps")
+    } finally q.stop()
+  }
+
+  test("a batch with KafkaRapid.stream's metadata columns gets its own template") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    Bridge.clearCaches(spark)
+    // Routed.trace reads the metadata columns only when the batch has them
+    val (regs, builds) = counted(Seq(eventRiver("a"))) { _ => r =>
+      r.passed.select(col("key"), to_json(r.trace(col("value"))).as("value"))
+    }
+    val plain = Seq(("k", """{"@event_name":"a","@id":"i1"}""")).toDF("key", "value")
+    val kafka = plain.select(col("key"), col("value"), lit("rapid").as("topic"),
+      lit(3).as("partition"), lit(7L).as("offset"),
+      array(struct(lit("h").as("key"), lit("v").cast("binary").as("value"))).as("headers"))
+    def route(batch: DataFrame): String = {
+      var out = Seq.empty[(String, String)]
+      Fanout.routeBatchUnioned(batch, regs) { replies => out = pairs(replies) }
+      assert(Bridge.noCachedPlans(spark))
+      out.map(_._2).mkString
+    }
+    val first = route(plain)
+    assert(first == """{"key":"k","id":"i1","event_name":"a"}""", first)
+    val meta = route(kafka)
+    assert(meta == """{"topic":"rapid","partition":3,"offset":7,"key":"k","id":"i1","event_name":"a"}""",
+      meta)
+    assert(route(plain) == first)
+    assert(builds.head.get == 2, "one build per batch schema")
+  }
+
+  test("the template cache keeps no registration list alive") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    def routeOnce(): java.lang.ref.WeakReference[Seq[Fanout.Registration]] = {
+      val regs = Seq(Fanout.Registration(eventRiver("a"),
+        r => r.passed.select(col("key"), col("value"))))
+      Fanout.routeBatchUnioned(Seq(("k", """{"@event_name":"a"}""")).toDF("key", "value"),
+        regs)(_.collect())
+      new java.lang.ref.WeakReference(regs)
+    }
+    val ref = routeOnce()
+    var tries = 0
+    while (ref.get != null && tries < 50) { System.gc(); Thread.sleep(20); tries += 1 }
+    assert(ref.get == null, "the registrations stayed reachable after their last use")
   }
 
   test("sink batch options drop only the checkpoint (the fanout query's own)") {

@@ -85,23 +85,31 @@ class RecoverySpec extends AnyFunSuite {
     assert(byId.toMap == Map("a" -> "1", "b" -> "2", "c" -> "3"))
   }
 
-  test("fanout foreachBatch under checkpointed restart: a crashed batch redelivers to EVERY river, committed batches do not") {
+  /** A crashed fanout batch redelivers to EVERY river on restart, and a
+    * committed one does not, when foreachBatch routes through `route`. The
+    * restarted query runs on a new session, so it compiles a fresh
+    * template: each flow is built once per query run.
+    */
+  private def fanoutCrashReplay(
+      route: (org.apache.spark.sql.DataFrame, Seq[Fanout.Registration]) =>
+        (org.apache.spark.sql.DataFrame => Unit) => Unit): Unit = {
     val spark = TestSpark.spark
     import spark.implicits._
     import graft.messages.{River, Validation}
     val dataDir = Files.createTempDirectory("graft-fanout-rec-data").toString
     val ckpt = Files.createTempDirectory("graft-fanout-rec-ckpt").toString
     val sunk = scala.collection.mutable.ArrayBuffer.empty[String]
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
     @volatile var crashOnce = true
 
     val regs = Seq(
       Fanout.Registration(
         River().precondition(Validation.requireValue("@event_name", "a")),
-        r => r.passed.select(col("key"), concat(lit("ra:"), col("value")).as("value")),
+        r => { builds.incrementAndGet(); r.passed.select(col("key"), concat(lit("ra:"), col("value")).as("value")) },
         "ra"),
       Fanout.Registration(
         River().validate(Validation.requireKey("@event_name")),
-        r => r.passed.select(col("key"), concat(lit("rb:"), col("value")).as("value")),
+        r => { builds.incrementAndGet(); r.passed.select(col("key"), concat(lit("rb:"), col("value")).as("value")) },
         "rb"))
 
     def startQuery() = spark.readStream
@@ -111,7 +119,7 @@ class RecoverySpec extends AnyFunSuite {
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        Fanout.routeBatchObserved(b, regs) { replies =>
+        route(b, regs) { replies =>
           val rows = replies.collect().map(_.getString(1))
           sunk.synchronized { sunk ++= rows; () }
         }
@@ -138,6 +146,15 @@ class RecoverySpec extends AnyFunSuite {
       "rb:{\"@event_name\":\"a\"}", "rb:{\"@event_name\":\"a\"}",
       "rb:{\"@event_name\":\"b\"}"),
       s"got ${sunk.sorted}")
+    assert(builds.get == 2 * regs.size, s"expected one build per flow per query run, got ${builds.get}")
+  }
+
+  test("fanout foreachBatch under checkpointed restart: a crashed batch redelivers to EVERY river, committed batches do not") {
+    fanoutCrashReplay((b, regs) => sink => { Fanout.routeBatchObserved(b, regs)(sink); () })
+  }
+
+  test("fanout crash-replay holds on the production route (routeBatchUnioned): a restart rebuilds the template") {
+    fanoutCrashReplay((b, regs) => sink => Fanout.routeBatchUnioned(b, regs)(sink))
   }
 
   test("@id dedup state runs on the RocksDB state store (the 100 TB state backend)") {
