@@ -4,8 +4,9 @@ import java.lang.ref.WeakReference
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, ExpressionWithRandomSeed}
 import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, LeafNode, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.trees.TreePattern.EXPRESSION_WITH_RANDOM_SEED
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -63,8 +64,11 @@ object Fanout {
     * is unsupported, and values a flow computes in Scala when it runs are
     * fixed for the query's life — per-trigger values belong in expressions
     * such as `current_timestamp()`, which each trigger evaluates anew.
-    * Analysis-time confs are fixed at query start, as for any streaming
-    * query definition.
+    * Every random expression (`uuid()`, `rand()`, `randn()`, `shuffle()`,
+    * ...) draws a fresh seed on every trigger, explicit seeds included, as
+    * Structured Streaming reseeds them for every micro-batch: a trigger
+    * never repeats the previous one's `@id`s. Analysis-time confs are
+    * fixed at query start, as for any streaming query definition.
     */
   final case class Registration(river: River, flow: Routed => DataFrame,
       name: String = "river")
@@ -139,16 +143,24 @@ object Fanout {
 
     /** The reply frame of one batch: every slot becomes the batch's
       * analyzed plan under a projection keeping the slot's attribute ids,
-      * and each observe node takes its observation's name, registered
-      * fresh for this action. The result is resolved by construction, so
-      * it is not analyzed again.
+      * each observe node takes its observation's name, registered fresh
+      * for this action, and every random expression of the template gets
+      * a new seed (they were seeded once, when the template was built).
+      * The result is resolved by construction, so it is not analyzed
+      * again.
       */
     def bind(batch: DataFrame, observations: Seq[Observation]): DataFrame = {
       val source = batch.queryExecution.analyzed
       val names = metrics.map(_._1).zip(observations.map(_.name)).toMap
+      // reseeded before the batch goes in: the batch plan must stay as
+      // persisted to be read from the cache
+      val seeded = plan.transformAllExpressionsWithPruning(
+          _.containsPattern(EXPRESSION_WITH_RANDOM_SEED)) {
+        case e: ExpressionWithRandomSeed => e.withNewSeed(seeds.nextLong())
+      }
       // up, not down: a slot's replacement holds the batch plan, which has
       // no slot to visit
-      val bound = plan.transformUp {
+      val bound = seeded.transformUp {
         case Slot(output) =>
           Project(output.zip(source.output).map { case (slot, in) =>
             Alias(in, slot.name)(exprId = slot.exprId)
@@ -167,6 +179,8 @@ object Fanout {
     * weakly, so neither stays reachable through this cache.
     */
   private val templates = new java.util.WeakHashMap[Seq[Registration], List[Template]]()
+
+  private val seeds = new java.util.Random()
 
   private def compiled(batch: DataFrame, regs: Seq[Registration], observe: Boolean): Template = {
     val session = batch.sparkSession

@@ -155,9 +155,10 @@ final class KafkaRapid(spark: SparkSession, config: KafkaRapidConfig) {
     *
     * Each flow is a plan builder and runs once per query: the first trigger
     * builds and analyzes every river plan, and later triggers bind their
-    * batch into that plan ([[Fanout.Registration]]). Actions inside a flow
-    * are unsupported, and analysis-time confs are fixed at query start, as
-    * for any streaming query definition.
+    * batch into that plan ([[Fanout.Registration]]), with fresh seeds for
+    * its random expressions such as the `uuid()` of reply `@id`s. Actions
+    * inside a flow are unsupported, and analysis-time confs are fixed at
+    * query start, as for any streaming query definition.
     */
   def run(regs: Seq[Fanout.Registration]): org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream

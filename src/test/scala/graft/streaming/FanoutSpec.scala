@@ -256,21 +256,30 @@ class FanoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(triggers(3).partitions != triggers.head.partitions,
         s"expected a different partition count, got ${triggers.map(_.partitions)}")
       assert(builds.map(_.get) == rivers.map(_ => 1), "each flow must be built once per query")
-      assert(q.recentProgress.map(_.numInputRows).sum == sends.flatten.flatten.size.toLong)
     } finally q.stop()
   }
 
-  test("a bound trigger stamps current_timestamp() with its own time") {
-    val (regs, _) = counted(Seq(eventRiver("a"))) { _ => r =>
-      Republish(r.passed.select(col("key"), col("value")), Nil, "svc", "inst")
+  test("a bound trigger stamps current_timestamp() with its own time and draws fresh seeds") {
+    // Republish's defaults: @opprettet from current_timestamp(), @id from
+    // uuid(); the second river's rand() and rand(7) are seeded when the
+    // template is built, and a trigger must not repeat those seeds either
+    val (regs, _) = counted(Seq(eventRiver("a"), eventRiver("a"))) {
+      case 0 => r => Republish(r.passed.select(col("key"), col("value")), Nil, "svc", "inst")
+      case _ => r => r.passed.select(col("key"),
+        to_json(struct(rand().as("rand"), rand(7).as("seeded"))).as("value"))
     }
-    val stamps = mutable.ArrayBuffer.empty[java.time.LocalDateTime]
+    final case class Reply(at: java.time.LocalDateTime, id: String, rand: Double, seeded: Double)
+    val replies = mutable.ArrayBuffer.empty[Reply]
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper
     val (input, q) = fanoutQuery("fanout-now") { b =>
-      Fanout.routeBatchUnioned(b, regs) { replies =>
-        stamps.synchronized {
-          stamps ++= pairs(replies).map(p =>
-            java.time.LocalDateTime.parse(mapper.readTree(p._2).path("@opprettet").asText()))
+      Fanout.routeBatchUnioned(b, regs) { out =>
+        val json = pairs(out).map(p => mapper.readTree(p._2))
+        val republished = json.find(_.has("@id")).get
+        val random = json.find(_.has("rand")).get
+        replies.synchronized {
+          replies += Reply(java.time.LocalDateTime.parse(republished.path("@opprettet").asText()),
+            republished.path("@id").asText(), random.path("rand").asDouble(),
+            random.path("seeded").asDouble())
         }
       }
     }
@@ -280,9 +289,14 @@ class FanoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       Thread.sleep(1100)
       input.addData(Seq("k2" -> """{"@event_name":"a"}"""))
       q.processAllAvailable()
-      assert(stamps.size == 2, s"got $stamps")
-      assert(java.time.Duration.between(stamps(0), stamps(1)).toMillis >= 1000,
-        s"the second trigger reused the first one's time: $stamps")
+      assert(replies.size == 2, s"got $replies")
+      val Seq(first, second) = replies.toSeq
+      assert(java.time.Duration.between(first.at, second.at).toMillis >= 1000,
+        s"the second trigger reused the first one's time: $replies")
+      assert(first.id.nonEmpty && first.id != second.id,
+        s"the second trigger repeated the first one's @id: $replies")
+      assert(first.rand != second.rand && first.seeded != second.seeded,
+        s"the second trigger repeated the first one's random seeds: $replies")
     } finally q.stop()
   }
 
@@ -316,16 +330,23 @@ class FanoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   test("the template cache keeps no registration list alive") {
     val spark = TestSpark.spark
     import spark.implicits._
+    val collected = new java.lang.ref.ReferenceQueue[Seq[Fanout.Registration]]
     def routeOnce(): java.lang.ref.WeakReference[Seq[Fanout.Registration]] = {
       val regs = Seq(Fanout.Registration(eventRiver("a"),
         r => r.passed.select(col("key"), col("value"))))
       Fanout.routeBatchUnioned(Seq(("k", """{"@event_name":"a"}""")).toDF("key", "value"),
         regs)(_.collect())
-      new java.lang.ref.WeakReference(regs)
+      new java.lang.ref.WeakReference(regs, collected)
     }
     val ref = routeOnce()
-    var tries = 0
-    while (ref.get != null && tries < 50) { System.gc(); Thread.sleep(20); tries += 1 }
+    // System.gc() is only a hint (a JVM may ignore it): allocate between
+    // requests too, so collections happen either way, and allow 60 s
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    var garbage: Array[Array[Byte]] = null
+    while (ref.get != null && collected.remove(100) == null && System.nanoTime() < deadline) {
+      System.gc()
+      garbage = Array.fill(16)(new Array[Byte](1 << 20))
+    }
     assert(ref.get == null, "the registrations stayed reachable after their last use")
   }
 
