@@ -490,8 +490,9 @@ object TextOps {
        |WHERE rnk <= $Bm25TopK ORDER BY rnk""".stripMargin
   }
 
-  /** MULTI-QUERY BM25 SERVING (the kernel behind the streaming twin of
-    * t32, mirroring s19's ANN serving): each request row is
+  /** MULTI-QUERY BM25 SERVING (the kernel behind t32's online serving
+    * through [[graft.streaming.CurationStream.serve]], mirroring s19's ANN
+    * serving): each request row is
     * (query_id, terms ARRAY<STRING>); every query scores with EXACTLY
     * [[bm25FromIndex]]'s fp sequence per contribution (same constants,
     * same 6-digit round, same decimal sum), ranked per query — so a
@@ -528,7 +529,8 @@ object TextOps {
     * (query_id, terms) shape: a null or empty term array cannot score
     * (the explode emits nothing), so the request is DROPPED and a
     * caller distinguishes it from a zero-match query through this
-    * channel (the streaming twins surface it via `onRejects`).
+    * channel (online serving passes it as a side channel of
+    * [[graft.streaming.CurationStream.serve]]).
     */
   private def bm25ValidPred: Column =
     col("terms").isNotNull && size(col("terms")) >= 1 &&
@@ -1136,8 +1138,9 @@ object TextOps {
   /** The query_ids [[phraseServeBatch]] DROPS as malformed (null or
     * empty phrase) — the detection channel the batch contract needs:
     * without it a rejected request is indistinguishable from a query
-    * with zero matching documents. The streaming twins surface this per
-    * micro-batch via their `onRejects` callback.
+    * with zero matching documents. Online serving surfaces it per
+    * micro-batch as a side channel of
+    * [[graft.streaming.CurationStream.serve]].
     */
   def phraseServeRejects(queries: DataFrame): DataFrame =
     queries.filter(!phraseValidPred).select(col("query_id"))
@@ -1695,11 +1698,11 @@ object TextOps {
     * Their protection is a GATE, not a rewrite: this table lists, per
     * request, every [[servingStopCandidates]] term the request touches
     * together with its occurrence volume `occ` — the posting rows that
-    * ONE leg would drag through k−1 join steps of the serve plan. A
-    * guarded streaming twin refuses such requests whole and hands this
-    * table to the operator (the request's cost and the exact term that
-    * caused it), leaving the unguarded twins' serve-anything semantics
-    * untouched for callers that strip upstream.
+    * ONE leg would drag through k−1 join steps of the serve plan.
+    * [[graft.streaming.CurationStream.HotTermGuard]] refuses such
+    * requests whole and hands this table to the operator (the request's
+    * cost and the exact term that caused it), leaving unguarded serving's
+    * serve-anything semantics untouched for callers that strip upstream.
     *
     * `termsCol` names the request column holding the term array
     * ("terms" for span-near/cooc, "phrase" for the phrase family);

@@ -862,8 +862,8 @@ object Pipeline {
     // the hot-term gate's pricing table (t61): per request of the t54
     // batch, every t56 stop-candidate leg it touches with the posting
     // volume ONE such leg drags through each chain join step — what the
-    // guarded twins hand the operator on refusal, as an oracle-gated
-    // batch surface
+    // online hot-term guard hands the operator on refusal, as an
+    // oracle-gated batch surface
     QueryDef.sql("t61_stop_legs",
       TextOps.sqlPositionalStopLegs(
         SpanNearBatch.map { case (q, ts, _) => (q, ts) })) { (s, dir) =>

@@ -19,12 +19,4 @@ final case class QueryDef(
 object QueryDef {
   def sql(name: String, oracle: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, fn, Some(oracle))
-
-  /** Rows-only checked (no SQL-expressible oracle). Currently UNUSED —
-    * every registered query carries a full oracle since p29 moved to the
-    * portable bloom — kept as the registration path for a future
-    * genuinely non-replayable operator.
-    */
-  def rowsOnly(name: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, None)
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.{Curation, Dedup, TextOps}
 
@@ -94,7 +94,7 @@ object CurationStream {
     * REPACK, which is an artifact-level rebuild, not a state purge) and
     * [[nearDupPairs]] (stateless — its corpus side is the saved LSH
     * index, erased by serving from the p53-pruned artifact, the
-    * bm25ServeWithTombstones convention).
+    * [[tombstoned]] serving convention).
     */
   val OpForget = "forget"
 
@@ -963,508 +963,87 @@ object CurationStream {
       .toDF()
   }
 
-  // ------------------------------------------ streaming ANN serving (s19)
+  // ------------------------------------------------- online serving (s19)
 
-  /** STREAMING ANN SERVING: the saved IVF-PQ index's online leg — a
-    * request stream of query vectors answered micro-batch by micro-batch
-    * with [[graft.operators.Similarity.ivfPqServe]], the s9 arithmetic
-    * against the static artifact tables (codes for candidates, the
-    * corpus table for the exact rerank). Stateless by construction:
-    * every micro-batch is an independent batch of lookups, so results
-    * are identical however the request stream is chopped, and a replayed
-    * batch re-emits identical rows (at-least-once sink semantics, like
-    * every foreachBatch sink here).
+  /** A side channel of [[serve]]: the rows a request batch yields on it
+    * (malformed rejects, refused hot-term legs, ...) and their consumer.
+    */
+  type SideChannel = (DataFrame => DataFrame, DataFrame => Unit)
+
+  /** ONLINE SERVING — a saved index's online leg: a request stream
+    * answered micro-batch by micro-batch by `answer`, one of the batch
+    * servers applied to the request batch —
+    * [[graft.operators.Similarity.ivfPqServe]] (ANN, s19),
+    * [[graft.operators.TextOps.bm25ServeBatch]] (BM25), or the positional
+    * `phrase`/`proximity`/`spanNear`/`coocServeBatch` — or its
+    * `*Budgeted` form (the t59/s20 serve-time cost budget), optionally
+    * wrapped by [[tombstoned]] and [[HotTermGuard]]. Stateless by
+    * construction: each micro-batch is an independent batch of lookups
+    * against the static artifact tables, so results are identical however
+    * the request stream is chopped, and a replayed batch re-emits
+    * identical rows (at-least-once sink semantics).
     *
-    * This closes the index lifecycle: build (s8) → save (s9) → daily
-    * shard encode (s11) → filter/delete (s12/s13) → repair (s16) →
-    * SERVE, online.
+    * Per trigger: an empty micro-batch calls nothing; otherwise
+    * `onBatch` receives `answer(batch)`, then each side channel in the
+    * order given computes its rows from the request batch and hands them
+    * to its consumer only when they are non-empty. A channel not passed
+    * costs no Spark job. The batch servers DROP malformed requests, so
+    * their `*ServeRejects` complement is the channel that tells a
+    * malformed request from a zero-match one.
     */
-  def annServe(queries: DataFrame, corpus: DataFrame,
-               idx: graft.operators.Similarity.IvfPqIndex, sub: Int, k: Int)
-              (onBatch: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    queries.writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        if (!b.isEmpty)
-          onBatch(graft.operators.Similarity.ivfPqServe(b, corpus, idx, sub, k))
-        ()
-      }
-
-  /** STREAMING BM25 SERVING — [[annServe]]'s retrieval twin, closing the
-    * last lifecycle asymmetry (both indexes now serve online): a request
-    * stream of (query_id, terms) rows answered per micro-batch from the
-    * four SAVED t32 index tables via
-    * [[graft.operators.TextOps.bm25ServeBatch]]. Stateless by
-    * construction — each micro-batch is an independent batch of lookups
-    * touching only its own terms' posting lists, so results are
-    * identical however the request stream is chopped, and a replayed
-    * batch re-emits identical rows (at-least-once sink semantics).
-    *
-    * Lifecycle: build (t31) → save (t32) → merge (t34) → delete (t35) →
-    * hybrid fuse (t33) → SERVE, online.
-    */
-  def bm25Serve(queries: DataFrame, idx: graft.operators.TextOps.Bm25Index,
-                k: Int = graft.operators.TextOps.Bm25TopK)
-               (onBatch: DataFrame => Unit,
-                onRejects: DataFrame => Unit = NoRejects)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+  def serve(queries: DataFrame, answer: DataFrame => DataFrame)
+           (onBatch: DataFrame => Unit, sides: SideChannel*)
+      : DataStreamWriter[Row] =
     queries.writeStream.outputMode("append")
       .foreachBatch { (b: DataFrame, _: Long) =>
         if (!b.isEmpty) {
-          onBatch(graft.operators.TextOps.bm25ServeBatch(b, idx, k))
-          surfaceRejects(
-            graft.operators.TextOps.bm25ServeRejects(b), onRejects)
+          onBatch(answer(b))
+          sides.foreach { case (rows, consume) =>
+            val r = rows(b)
+            if (!r.isEmpty) consume(r)
+          }
         }
         ()
       }
 
-  /** [[bm25Serve]] with the t59 SERVE-TIME COST BUDGET — the online
-    * twin of [[graft.operators.TextOps.bm25ServeBatchBudgeted]]: each
-    * micro-batch's requests are stripped to their budgeted term sets
-    * (df-priced, rarest-first, within Bm25BudgetFactor × N) before the
-    * seek, so a stopword-flooded request stream degrades gracefully
-    * instead of dragging the hot posting lists through every
-    * micro-batch. Stateless like its sibling (results identical however
-    * the stream is chopped); malformed requests surface through
-    * `onRejects` exactly as [[bm25Serve]]'s (the budget adds no reject
-    * class — the rarest term always survives).
+  /** TOMBSTONE-AWARE answering — erasure reaches the serving layer
+    * without a restart or an index rebuild: every micro-batch re-reads
+    * the append-only tombstone table at `tombstoneDir` (doc_id or vec_id
+    * rows; the index rebuild can lag behind it) from the batch's own
+    * session, prunes `idx` with the kind's own `prune`
+    * ([[graft.operators.Forget.pruneAnnIndexList]],
+    * [[graft.operators.TextOps.deleteListFromBm25Index]],
+    * [[graft.operators.TextOps.deleteListFromPositionalIndex]]) and
+    * answers against the pruned index: a doc erased between two requests
+    * is served to the first and invisible to the second. BM25's df/avgdl
+    * are re-derived per batch (t35), and a budget walk prices each
+    * request against the pruned index, as a fresh build would.
     */
-  def bm25ServeBudgeted(queries: DataFrame,
-                        idx: graft.operators.TextOps.Bm25Index,
-                        k: Int = graft.operators.TextOps.Bm25TopK)
-                       (onBatch: DataFrame => Unit,
-                        onRejects: DataFrame => Unit = NoRejects)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    queries.writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        if (!b.isEmpty) {
-          onBatch(graft.operators.TextOps.bm25ServeBatchBudgeted(b, idx, k))
-          surfaceRejects(
-            graft.operators.TextOps.bm25ServeRejects(b), onRejects)
-        }
-        ()
-      }
+  def tombstoned[I](idx: I, tombstoneDir: String, prune: (I, DataFrame) => I)
+                   (answer: (DataFrame, I) => DataFrame): DataFrame => DataFrame =
+    b => answer(b, prune(idx, b.sparkSession.read.parquet(tombstoneDir)))
 
-  /** [[annServe]] with the s20 SERVE-TIME COST BUDGET — the online twin
-    * of [[graft.operators.Similarity.ivfPqServeBudgeted]]: each
-    * micro-batch's requests are stripped to their budgeted probe sets
-    * (occupancy-priced from the saved index's assignment table, kept
-    * nearest-first within AnnBudgetFactor × expected volume, the
-    * nearest probe always surviving) before the codes seek, so a
-    * request stream landing in pathologically crowded cells degrades to
-    * a narrower effective nprobe per batch instead of dragging the hot
-    * cells' code blocks through every micro-batch. Stateless like its
-    * sibling — the budget walk prices each request independently
-    * against the static index, so results are identical however the
-    * stream is chopped (CurationStreamSpec pins stream == batch). No
-    * reject channel, exactly as [[annServe]]: ANN requests carry no
-    * malformed-but-present shape (a null/empty vector emits nothing in
-    * both entry points), and the budget adds no reject class.
+  /** THE POSITIONAL HOT-TERM GATE: requests touching any
+    * [[graft.operators.TextOps.servingStopCandidates]] term (the `stop`
+    * table) are REFUSED WHOLE — never served, never term-stripped (a
+    * span-near chain or a cooc window is structural: dropping a leg
+    * changes what the query means, which is why the t59/s20 budgets
+    * exclude this family). `apply` wraps an `answer` so it serves only
+    * the clean requests, byte-identically to the unguarded server;
+    * [[refused]] is the side channel carrying the refused requests'
+    * (query_id, t, occ) legs from
+    * [[graft.operators.TextOps.positionalStopLegs]] — the term that
+    * triggered the gate and the posting rows that one leg would have
+    * dragged through the serve plan's join steps, i.e. what the request
+    * would have COST. Refusal judges cost, the malformed channel shape: a
+    * hot, malformed but non-null term array lands on both.
     */
-  def annServeBudgeted(queries: DataFrame, corpus: DataFrame,
-                       idx: graft.operators.Similarity.IvfPqIndex,
-                       sub: Int, k: Int)
-                      (onBatch: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    queries.writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        if (!b.isEmpty)
-          onBatch(graft.operators.Similarity.ivfPqServeBudgeted(
-            b, corpus, idx, sub, k))
-        ()
-      }
+  final case class HotTermGuard(stop: DataFrame) {
+    val legs: DataFrame => DataFrame = TextOps.positionalStopLegs(_, stop)
+    def apply(answer: DataFrame => DataFrame): DataFrame => DataFrame =
+      b => answer(b.join(legs(b).select(col("query_id")).distinct(),
+        Seq("query_id"), "left_anti"))
 
-  /** [[annServe]] with a PER-BATCH TOMBSTONE read — the ANN side of
-    * [[bm25ServeWithTombstones]]: each micro-batch re-reads the
-    * append-only vec_id tombstone table and serves from the pruned
-    * index, so an erasure lands between two queries without restart or
-    * index rebuild. The quantizers are untouched; only per-vector rows
-    * anti-join the (small, broadcast) list.
-    */
-  def annServeWithTombstones(queries: DataFrame, corpus: DataFrame,
-                             idx: graft.operators.Similarity.IvfPqIndex,
-                             tombstoneDir: String, sub: Int, k: Int)
-                            (onBatch: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    queries.writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        if (!b.isEmpty) {
-          val tomb = b.sparkSession.read.parquet(tombstoneDir)
-          onBatch(graft.operators.Similarity.ivfPqServe(b, corpus,
-            graft.operators.Forget.pruneAnnIndexList(idx, tomb), sub, k))
-        }
-        ()
-      }
-
-  /** TOMBSTONE-AWARE ONLINE SERVING — erasure reaches the serving layer
-    * WITHOUT a restart, completing the p53 story online: every
-    * micro-batch re-reads the tombstone table (the append-only doc_id
-    * list an erasure pipeline maintains; the index rebuild can lag
-    * behind it) and serves from the tombstone-pruned index — so a doc
-    * erased between two requests is served to the first and invisible
-    * to the second, with df/avgdl re-derived per batch exactly as t35
-    * prescribes. The tombstone read is one small parquet scan per
-    * batch; the anti-join broadcasts it; everything else is
-    * [[bm25Serve]]'s stateless lookup shape.
-    */
-  def bm25ServeWithTombstones(queries: DataFrame,
-                              idx: graft.operators.TextOps.Bm25Index,
-                              tombstoneDir: String,
-                              k: Int = graft.operators.TextOps.Bm25TopK)
-                             (onBatch: DataFrame => Unit,
-                              onRejects: DataFrame => Unit = NoRejects)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    queries.writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        if (!b.isEmpty) {
-          val tomb = b.sparkSession.read.parquet(tombstoneDir)
-          onBatch(graft.operators.TextOps.bm25ServeBatch(b,
-            graft.operators.TextOps.deleteListFromBm25Index(idx, tomb), k))
-          surfaceRejects(
-            graft.operators.TextOps.bm25ServeRejects(b), onRejects)
-        }
-        ()
-      }
-
-  /** [[bm25ServeBudgeted]] with the PER-BATCH TOMBSTONE read — the
-    * erasure convention composed with the t59 budget, closing the
-    * serving-mode symmetry (every serve twin now has both a budgeted
-    * and a tombstoned form, and this is their composition): each
-    * micro-batch re-reads the tombstone table, prunes the index
-    * (statistics re-derived from survivors), and the budget walk prices
-    * each request AGAINST THE PRUNED INDEX — so an erasure can
-    * legitimately flip a keep/drop verdict between two requests (a
-    * term whose hot df came from erased docs gets cheaper and may
-    * survive), exactly as a fresh build would price it. Serving a
-    * batch equals [[graft.operators.TextOps.bm25ServeBatchBudgeted]]
-    * over the pruned index (spec-pinned).
-    */
-  def bm25ServeBudgetedWithTombstones(queries: DataFrame,
-                                      idx: graft.operators.TextOps.Bm25Index,
-                                      tombstoneDir: String,
-                                      k: Int = graft.operators.TextOps.Bm25TopK)
-                                     (onBatch: DataFrame => Unit,
-                                      onRejects: DataFrame => Unit = NoRejects)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    queries.writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        if (!b.isEmpty) {
-          val tomb = b.sparkSession.read.parquet(tombstoneDir)
-          onBatch(graft.operators.TextOps.bm25ServeBatchBudgeted(b,
-            graft.operators.TextOps.deleteListFromBm25Index(idx, tomb), k))
-          surfaceRejects(
-            graft.operators.TextOps.bm25ServeRejects(b), onRejects)
-        }
-        ()
-      }
-
-  /** [[annServeBudgeted]] with the PER-BATCH TOMBSTONE read — the ANN
-    * side of [[bm25ServeBudgetedWithTombstones]]: the budget walk
-    * prices probed cells against the PRUNED index's occupancies (an
-    * erased crowd makes its cell cheaper and a previously-dropped probe
-    * may survive — prices follow the surviving truth), and serving a
-    * batch equals ivfPqServeBudgeted over the pruned index.
-    */
-  def annServeBudgetedWithTombstones(queries: DataFrame, corpus: DataFrame,
-                                     idx: graft.operators.Similarity.IvfPqIndex,
-                                     tombstoneDir: String, sub: Int, k: Int)
-                                    (onBatch: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    queries.writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        if (!b.isEmpty) {
-          val tomb = b.sparkSession.read.parquet(tombstoneDir)
-          onBatch(graft.operators.Similarity.ivfPqServeBudgeted(b, corpus,
-            graft.operators.Forget.pruneAnnIndexList(idx, tomb), sub, k))
-        }
-        ()
-      }
-
-  /** PHRASE SERVING, online ([[bm25Serve]]'s convention for the saved
-    * positional index): a stream of (query_id, phrase) rows answered
-    * per micro-batch from the t49 artifact via
-    * [[graft.operators.TextOps.phraseServeBatch]] — stateless lookups
-    * touching only the batch's own terms' occurrence lists, identical
-    * however the request stream is chopped.
-    *
-    * Lifecycle, positional edition: build (t47) → save (t49) → merge +
-    * compact (t50) → delete (t51) → SERVE, online.
-    */
-  def phraseServe(queries: DataFrame,
-                  idx: graft.operators.TextOps.PositionalIndex)
-                 (onBatch: DataFrame => Unit,
-                  onRejects: DataFrame => Unit = NoRejects)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    queries.writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        if (!b.isEmpty) {
-          onBatch(graft.operators.TextOps.phraseServeBatch(b, idx))
-          surfaceRejects(
-            graft.operators.TextOps.phraseServeRejects(b), onRejects)
-        }
-        ()
-      }
-
-  /** The DEFAULT no-op rejects consumer — a SENTINEL, not just a
-    * convenience: [[surfaceRejects]] compares against it by reference
-    * and skips the rejects computation entirely when a caller left the
-    * default in place, so the ten serving twins pay the extra per-
-    * micro-batch Spark job (an `isEmpty` over the request batch) ONLY
-    * when someone actually consumes the channel. A caller who wants the
-    * no-op behavior while still paying for detection can pass its own
-    * `_ => ()` literal, which is a different function instance.
-    */
-  val NoRejects: DataFrame => Unit = _ => ()
-
-  /** The malformed-request channel shared by the positional serving
-    * twins: the batch servers DROP requests that would poison the
-    * shared plan (empty phrases, sub-1 slops, sub-2 chains), so a
-    * rejected request would otherwise be indistinguishable from a
-    * query with zero matches. Each micro-batch hands the dropped
-    * query_ids to `onRejects` (default [[NoRejects]], which skips the
-    * whole computation) so an operator can alert on a malformed-request
-    * producer without parsing serve output.
-    */
-  private def surfaceRejects(rejects: => DataFrame,
-                             onRejects: DataFrame => Unit): Unit =
-    if (!(onRejects eq NoRejects)) {
-      val r = rejects
-      if (!r.isEmpty) onRejects(r)
-    }
-
-  /** [[phraseServe]] with the PER-BATCH TOMBSTONE read
-    * ([[bm25ServeWithTombstones]]' rule): each micro-batch re-reads the
-    * append-only doc_id tombstone table and serves from the anti-
-    * filtered occurrences, so an erased doc stops matching phrases
-    * between two requests with no restart and no index rebuild —
-    * positional search has no derived statistics, so the prune is the
-    * whole story.
-    */
-  def phraseServeWithTombstones(queries: DataFrame,
-                                idx: graft.operators.TextOps.PositionalIndex,
-                                tombstoneDir: String)
-                               (onBatch: DataFrame => Unit,
-                                onRejects: DataFrame => Unit = NoRejects)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    queries.writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        if (!b.isEmpty) {
-          val tomb = b.sparkSession.read.parquet(tombstoneDir)
-          onBatch(graft.operators.TextOps.phraseServeBatch(b,
-            graft.operators.TextOps.deleteListFromPositionalIndex(idx, tomb)))
-          surfaceRejects(
-            graft.operators.TextOps.phraseServeRejects(b), onRejects)
-        }
-        ()
-      }
-
-  /** PROXIMITY SERVING, online — [[phraseServe]]'s sibling over
-    * (query_id, a, b, slop) request rows, answered per micro-batch via
-    * [[graft.operators.TextOps.proximityServeBatch]] (mixed slops serve
-    * together; stateless, chop-invariant).
-    */
-  def proximityServe(queries: DataFrame,
-                     idx: graft.operators.TextOps.PositionalIndex)
-                    (onBatch: DataFrame => Unit,
-                     onRejects: DataFrame => Unit = NoRejects)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    queries.writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        if (!b.isEmpty) {
-          onBatch(graft.operators.TextOps.proximityServeBatch(b, idx))
-          surfaceRejects(
-            graft.operators.TextOps.proximityServeRejects(b), onRejects)
-        }
-        ()
-      }
-
-  /** [[proximityServe]] with the per-batch tombstone re-read — the
-    * erasure convention, completing the positional pair: both query
-    * classes serve tombstone-aware from the same artifact.
-    */
-  def proximityServeWithTombstones(queries: DataFrame,
-                                   idx: graft.operators.TextOps.PositionalIndex,
-                                   tombstoneDir: String)
-                                  (onBatch: DataFrame => Unit,
-                                   onRejects: DataFrame => Unit = NoRejects)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    queries.writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        if (!b.isEmpty) {
-          val tomb = b.sparkSession.read.parquet(tombstoneDir)
-          onBatch(graft.operators.TextOps.proximityServeBatch(b,
-            graft.operators.TextOps.deleteListFromPositionalIndex(idx, tomb)))
-          surfaceRejects(
-            graft.operators.TextOps.proximityServeRejects(b), onRejects)
-        }
-        ()
-      }
-
-  /** SPAN-NEAR SERVING, online — the general ordered-chain member of
-    * the positional serving family, completing its symmetry: a stream
-    * of (query_id, terms, gap) request rows answered per micro-batch
-    * from the saved positional artifact via
-    * [[graft.operators.TextOps.spanNearServeBatch]] (mixed chain
-    * lengths and gaps serve together; stateless, chop-invariant;
-    * malformed requests surface through `onRejects`).
-    */
-  def spanNearServe(queries: DataFrame,
-                    idx: graft.operators.TextOps.PositionalIndex)
-                   (onBatch: DataFrame => Unit,
-                    onRejects: DataFrame => Unit = NoRejects)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    queries.writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        if (!b.isEmpty) {
-          onBatch(graft.operators.TextOps.spanNearServeBatch(b, idx))
-          surfaceRejects(
-            graft.operators.TextOps.spanNearServeRejects(b), onRejects)
-        }
-        ()
-      }
-
-  /** [[spanNearServe]] with the HOT-TERM GATE — the positional family's
-    * declared protection ("strip upstream against the t56 stop list")
-    * wired as an opt-in operator instead of a policy comment: each
-    * micro-batch's requests are checked against the
-    * [[graft.operators.TextOps.servingStopCandidates]] table, and a
-    * request touching ANY stop-candidate term is REFUSED WHOLE — never
-    * served, never silently term-stripped (a span-near chain is
-    * structural: dropping a leg changes what the query means, which is
-    * exactly why the t59/s20 budgets exclude this family). The refusal
-    * surfaces on its own channel, distinct from malformed rejects:
-    * `onRefused` receives the (query_id, t, occ) legs — the exact term
-    * that triggered the gate and the posting rows that one leg would
-    * have dragged through each of the chain's k−1 join steps — so the
-    * operator is told what the request would have COST, not just that
-    * it was dropped. Well-formed, non-hot requests serve byte-identically
-    * to [[spanNearServe]]; the malformed channel is unchanged. The two
-    * channels judge independent axes (shape vs cost) and can OVERLAP
-    * only when the term array itself is well-formed — a hot sub-2 chain
-    * or bad-gap request appears on both; a null/null-element array
-    * cannot be cost-judged at all (positionalStopLegs skips it), so
-    * that shape stays on the malformed channel alone.
-    *
-    * The other positional members keep their pinned decisions: phrase
-    * and proximity serve full term sets (their two-term shapes bound a
-    * request's legs by construction), cooc callers can wire the same
-    * gate through [[graft.operators.TextOps.positionalStopLegs]] — the
-    * gate composes, it is not baked into every twin.
-    */
-  def spanNearServeGuarded(queries: DataFrame,
-                           idx: graft.operators.TextOps.PositionalIndex,
-                           stop: DataFrame)
-                          (onBatch: DataFrame => Unit,
-                           onRejects: DataFrame => Unit = NoRejects,
-                           onRefused: DataFrame => Unit = NoRejects)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    queries.writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        if (!b.isEmpty) {
-          val legs = graft.operators.TextOps.positionalStopLegs(b, stop)
-          val hot = legs.select(col("query_id")).distinct()
-          onBatch(graft.operators.TextOps.spanNearServeBatch(
-            b.join(hot, Seq("query_id"), "left_anti"), idx))
-          surfaceRejects(
-            graft.operators.TextOps.spanNearServeRejects(b), onRejects)
-          surfaceRejects(legs, onRefused)
-        }
-        ()
-      }
-
-  /** [[spanNearServe]] with the per-batch tombstone re-read — the
-    * erasure convention every positional query class now carries: an
-    * erased doc stops matching chains between two requests with no
-    * restart and no index rebuild.
-    */
-  def spanNearServeWithTombstones(queries: DataFrame,
-                                  idx: graft.operators.TextOps.PositionalIndex,
-                                  tombstoneDir: String)
-                                 (onBatch: DataFrame => Unit,
-                                  onRejects: DataFrame => Unit = NoRejects)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    queries.writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        if (!b.isEmpty) {
-          val tomb = b.sparkSession.read.parquet(tombstoneDir)
-          onBatch(graft.operators.TextOps.spanNearServeBatch(b,
-            graft.operators.TextOps.deleteListFromPositionalIndex(idx, tomb)))
-          surfaceRejects(
-            graft.operators.TextOps.spanNearServeRejects(b), onRejects)
-        }
-        ()
-      }
-
-  /** CO-OCCURRENCE SERVING, online — the unordered member of the
-    * positional serving family: a stream of (query_id, terms, win)
-    * request rows answered per micro-batch via
-    * [[graft.operators.TextOps.coocServeBatch]] (mixed term-counts and
-    * windows share one fixed-shape plan; stateless, chop-invariant;
-    * malformed requests surface through `onRejects`).
-    */
-  def coocServe(queries: DataFrame,
-                idx: graft.operators.TextOps.PositionalIndex)
-               (onBatch: DataFrame => Unit,
-                onRejects: DataFrame => Unit = NoRejects)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    queries.writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        if (!b.isEmpty) {
-          onBatch(graft.operators.TextOps.coocServeBatch(b, idx))
-          surfaceRejects(
-            graft.operators.TextOps.coocServeRejects(b), onRejects)
-        }
-        ()
-      }
-
-  /** [[coocServe]] with the HOT-TERM GATE — [[spanNearServeGuarded]]'s
-    * contract for the unordered family (the same
-    * [[graft.operators.TextOps.positionalStopLegs]] pricing, the same
-    * refuse-whole/never-strip rule — an unordered window query is still
-    * structural: its terms are the question): hot requests surface on
-    * `onRefused` as (query_id, t, occ) legs, clean requests serve
-    * byte-identically to [[coocServe]], the malformed channel is
-    * unchanged.
-    */
-  def coocServeGuarded(queries: DataFrame,
-                       idx: graft.operators.TextOps.PositionalIndex,
-                       stop: DataFrame)
-                      (onBatch: DataFrame => Unit,
-                       onRejects: DataFrame => Unit = NoRejects,
-                       onRefused: DataFrame => Unit = NoRejects)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    queries.writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        if (!b.isEmpty) {
-          val legs = graft.operators.TextOps.positionalStopLegs(b, stop)
-          val hot = legs.select(col("query_id")).distinct()
-          onBatch(graft.operators.TextOps.coocServeBatch(
-            b.join(hot, Seq("query_id"), "left_anti"), idx))
-          surfaceRejects(
-            graft.operators.TextOps.coocServeRejects(b), onRejects)
-          surfaceRejects(legs, onRefused)
-        }
-        ()
-      }
-
-  /** [[coocServe]] with the per-batch tombstone re-read — the erasure
-    * convention all four positional query classes now carry.
-    */
-  def coocServeWithTombstones(queries: DataFrame,
-                              idx: graft.operators.TextOps.PositionalIndex,
-                              tombstoneDir: String)
-                             (onBatch: DataFrame => Unit,
-                              onRejects: DataFrame => Unit = NoRejects)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    queries.writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        if (!b.isEmpty) {
-          val tomb = b.sparkSession.read.parquet(tombstoneDir)
-          onBatch(graft.operators.TextOps.coocServeBatch(b,
-            graft.operators.TextOps.deleteListFromPositionalIndex(idx, tomb)))
-          surfaceRejects(
-            graft.operators.TextOps.coocServeRejects(b), onRejects)
-        }
-        ()
-      }
+    def refused(onRefused: DataFrame => Unit): SideChannel = (legs, onRefused)
+  }
 }

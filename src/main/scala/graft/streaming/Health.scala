@@ -73,15 +73,7 @@ object Health {
       x.close()
     }
 
-    http.createContext("/isalive", (x: HttpExchange) =>
-      if (alive()) respond(x, 200, "ALIVE") else respond(x, 503, ""))
-    http.createContext("/isready", (x: HttpExchange) =>
-      if (readyToggle.get() && ready()) respond(x, 200, "READY")
-      else respond(x, 503, ""))
-    http.createContext("/metrics", (x: HttpExchange) =>
-      respond(x, 200, metrics().toSeq.sortBy(_._1)
-        .map { case (k, v) => s"$k $v" }.mkString("", "\n", "\n")))
-    http.createContext("/stop", { (x: HttpExchange) =>
+    def stop(x: HttpExchange): Unit = {
       // readiness drops FIRST so the load balancer stops routing here while
       // the hook drains (KtorApplication.kt:124-137's termination order).
       readyToggle.set(false)
@@ -113,15 +105,35 @@ object Health {
           Thread.currentThread().interrupt()
           respond(x, 503, "interrupted while waiting for the drain")
       }
-    })
-    extraRoutes.foreach { case (path, handler) =>
-      http.createContext(path, { (x: HttpExchange) =>
+    }
+    val probes: Map[String, HttpExchange => Unit] = Map(
+      "/isalive" -> (x =>
+        if (alive()) respond(x, 200, "ALIVE") else respond(x, 503, "")),
+      "/isready" -> (x =>
+        if (readyToggle.get() && ready()) respond(x, 200, "READY")
+        else respond(x, 503, "")),
+      "/metrics" -> (x =>
+        respond(x, 200, metrics().toSeq.sortBy(_._1)
+          .map { case (k, v) => s"$k $v" }.mkString("", "\n", "\n"))),
+      "/stop" -> stop)
+    val clash = extraRoutes.keySet.intersect(probes.keySet)
+    require(clash.isEmpty, s"extra routes shadow the probes: ${clash.mkString(", ")}")
+    val routes = probes ++ extraRoutes.map { case (path, handler) =>
+      path -> { (x: HttpExchange) =>
         val (code, body) =
           try handler()
           catch { case e: Throwable => (500, s"handler failed: $e") }
         respond(x, code, body)
-      })
+      }
     }
+    // One root context dispatching on the EXACT path: a JDK context
+    // matches by plain string prefix, so per-route contexts would let
+    // GET /stopwatch or /stop/x run the stop hook.
+    http.createContext("/", (x: HttpExchange) =>
+      routes.get(x.getRequestURI.getPath) match {
+        case Some(route) => route(x)
+        case None => respond(x, 404, "")
+      })
     http.start()
     new Server(http, readyToggle)
   }

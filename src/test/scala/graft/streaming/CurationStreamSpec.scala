@@ -23,6 +23,93 @@ class CurationStreamSpec extends AnyFunSuite {
     graft.operators.TextOps.trainAndSaveSurprisalModel(docs, dir)
   }
 
+  /** Lands `df` in `dir` as the one parquet file `name`: written aside,
+    * then moved in whole, so a file source reading `dir` with
+    * maxFilesPerTrigger=1 sees it as exactly one new micro-batch.
+    */
+  private def landFile(df: DataFrame, dir: String, name: String): java.io.File = {
+    val tmp = Files.createTempDirectory("graft-curstream-chunk").toString
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    val part = new java.io.File(tmp).listFiles()
+      .filter(_.getName.startsWith("part-")).head
+    val dest = new java.io.File(dir, name)
+    Files.move(part.toPath, dest.toPath)
+    dest
+  }
+
+  /** Polls `cond` for up to 120 s, failing with `what` on timeout. */
+  private def await(cond: => Boolean, what: String): Unit = {
+    val deadline = System.currentTimeMillis() + 120000
+    while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(200)
+    assert(cond, s"timed out waiting for $what")
+  }
+
+  test("online serve per-trigger contract: an empty micro-batch calls nothing, an empty side channel stays silent, an absent one costs no job") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    import graft.operators.TextOps
+    val schema = Seq((1L, Seq("x"))).toDF("query_id", "terms").schema
+    // trigger 0: a zero-row file; 1: well-formed requests only; 2: one
+    // well-formed and one malformed (empty term array) request
+    val dataDir = Files.createTempDirectory("graft-serveonline-req").toString
+    landFile(Seq.empty[(Long, Seq[String])].toDF("query_id", "terms"),
+      dataDir, "req-000.parquet")
+    landFile(Seq((1L, Seq("spark")), (2L, Seq("window", "hash"))).toDF("query_id", "terms"),
+      dataDir, "req-001.parquet")
+    landFile(Seq((3L, Seq("hash")), (4L, Seq.empty[String])).toDF("query_id", "terms"),
+      dataDir, "req-002.parquet")
+
+    // Spark jobs per streaming query: every job a micro-batch starts
+    // carries its query id as a local property
+    val jobs = scala.collection.concurrent.TrieMap.empty[String, Int]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("sql.streaming.queryId")))
+          .foreach(id => jobs.synchronized(jobs.put(id, jobs.getOrElse(id, 0) + 1)))
+    }
+    val log = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val answer = (b: DataFrame) => { log.add("answer"); b }
+    val onBatch = (b: DataFrame) => { log.add(s"onBatch ${b.count()}"); () }
+    // runs the three triggers through `sink`; returns the call log and
+    // the number of Spark jobs the query ran
+    def run(sink: DataFrame => org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row])
+        : (Seq[String], Int) = {
+      log.clear()
+      val q = sink(spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(dataDir))
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation",
+          Files.createTempDirectory("graft-serveonline-ckpt").toString)
+        .start()
+      q.awaitTermination(120000)
+      assert(q.recentProgress.length == 3 && q.recentProgress.head.numInputRows == 0,
+        "three triggers, the first one empty")
+      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+      (log.toArray.toSeq.map(_.toString), jobs.getOrElse(q.id.toString, 0))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (logged, _) = run(CurationStream.serve(_, answer)(onBatch,
+        (b => { log.add("rejects rows"); TextOps.bm25ServeRejects(b) },
+          r => { log.add(s"rejects ${r.collect().map(_.getLong(0)).mkString(",")}"); () }),
+        (b => { log.add("silent rows"); b.filter(col("query_id") < 0L) },
+          _ => { log.add("silent"); () })))
+      assert(logged == Seq(
+        "answer", "onBatch 2", "rejects rows", "silent rows",
+        "answer", "onBatch 2", "rejects rows", "rejects 4", "silent rows"),
+        logged.toString)
+      // no side channel passed: exactly the jobs of a hand-written sink
+      // that only skips empty batches and answers
+      val (plain, plainJobs) = run(CurationStream.serve(_, answer)(onBatch))
+      assert(plain == Seq("answer", "onBatch 2", "answer", "onBatch 2"), plain.toString)
+      val (_, bareJobs) = run(_.writeStream.foreachBatch { (b: DataFrame, _: Long) =>
+        if (!b.isEmpty) onBatch(answer(b))
+        ()
+      })
+      assert(plainJobs > 0 && plainJobs == bareJobs, s"$plainJobs vs $bareJobs jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("streaming BM25 serving equals the batch serve; a Bm25Query request reproduces t32") {
     val spark = TestSpark.spark
     import spark.implicits._
@@ -49,23 +136,14 @@ class CurationStreamSpec extends AnyFunSuite {
     assert(!expected.exists(_._1 == 4L), "unknown-term query emits nothing")
 
     val dataDir = Files.createTempDirectory("graft-bm25serve-req").toString
-    def writeChunk(df: DataFrame, i: Int): Unit = {
-      val tmp = Files.createTempDirectory("graft-bm25serve-chunk").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.startsWith("part-")).head
-      Files.move(part.toPath,
-        new java.io.File(dataDir, f"req-$i%03d.parquet").toPath)
-      ()
-    }
-    writeChunk(queries.filter(col("query_id") < 4L), 0)
-    writeChunk(queries.filter(col("query_id") >= 4L), 1)
+    landFile(queries.filter(col("query_id") < 4L), dataDir, "req-000.parquet")
+    landFile(queries.filter(col("query_id") >= 4L), dataDir, "req-001.parquet")
 
     val got = scala.collection.concurrent.TrieMap
       .empty[(Long, Int), (Long, Double)]
     val stream = spark.readStream.schema(queries.schema)
       .option("maxFilesPerTrigger", "1").parquet(dataDir)
-    val q = CurationStream.bm25Serve(stream, idx) { b =>
+    val q = CurationStream.serve(stream, TextOps.bm25ServeBatch(_, idx)) { b =>
       b.collect().foreach(r =>
         got.put((r.getLong(0), r.getInt(1)), (r.getLong(2), r.getDouble(3))))
     }
@@ -100,26 +178,17 @@ class CurationStreamSpec extends AnyFunSuite {
     assert(expected.nonEmpty, "the budgeted fixture batch must serve rows")
 
     val dataDir = Files.createTempDirectory("graft-bm25budget-req").toString
-    def writeChunk(df: DataFrame, i: Int): Unit = {
-      val tmp = Files.createTempDirectory("graft-bm25budget-chunk").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.startsWith("part-")).head
-      Files.move(part.toPath,
-        new java.io.File(dataDir, f"req-$i%03d.parquet").toPath)
-      ()
-    }
     // chop so a rare+hot request and an all-hot request land in
     // DIFFERENT micro-batches: the budget walk is per-request, so the
     // split must not change any keep decision
-    writeChunk(queries.filter(col("query_id") <= 2L), 0)
-    writeChunk(queries.filter(col("query_id") > 2L), 1)
+    landFile(queries.filter(col("query_id") <= 2L), dataDir, "req-000.parquet")
+    landFile(queries.filter(col("query_id") > 2L), dataDir, "req-001.parquet")
 
     val got = scala.collection.concurrent.TrieMap
       .empty[(Long, Int), (Long, Double)]
     val stream = spark.readStream.schema(queries.schema)
       .option("maxFilesPerTrigger", "1").parquet(dataDir)
-    val q = CurationStream.bm25ServeBudgeted(stream, idx) { b =>
+    val q = CurationStream.serve(stream, TextOps.bm25ServeBatchBudgeted(_, idx)) { b =>
       b.collect().foreach(r =>
         got.put((r.getLong(0), r.getInt(1)), (r.getLong(2), r.getDouble(3))))
     }
@@ -147,23 +216,15 @@ class CurationStreamSpec extends AnyFunSuite {
     Seq.empty[Long].toDF("doc_id").write.mode("overwrite").parquet(tombDir)
 
     val dataDir = Files.createTempDirectory("graft-postomb-req").toString
-    def writeReq(qid: Long, i: Int): Unit = {
-      val tmp = Files.createTempDirectory("graft-postomb-chunk").toString
-      Seq((qid, TextOps.PhraseQuery)).toDF("query_id", "phrase")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.startsWith("part-")).head
-      Files.move(part.toPath,
-        new java.io.File(dataDir, f"req-$i%03d.parquet").toPath)
-      ()
-    }
-    writeReq(1L, 0)
+    landFile(Seq((1L, TextOps.PhraseQuery)).toDF("query_id", "phrase"),
+      dataDir, "req-000.parquet")
 
     val got = scala.collection.concurrent.TrieMap.empty[(Long, Long), Long]
     val schema = Seq((1L, Seq("x"))).toDF("query_id", "phrase").schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(dataDir)
-    val q = CurationStream.phraseServeWithTombstones(stream, idx, tombDir) { b =>
+    val q = CurationStream.serve(stream, CurationStream.tombstoned(idx, tombDir,
+        TextOps.deleteListFromPositionalIndex)(TextOps.phraseServeBatch)) { b =>
       b.collect().foreach(r =>
         got.put((r.getLong(0), r.getLong(1)), r.getLong(2)))
     }
@@ -171,15 +232,11 @@ class CurationStreamSpec extends AnyFunSuite {
       .option("checkpointLocation",
         Files.createTempDirectory("graft-postomb-ckpt").toString)
       .start()
-    def await(cond: => Boolean, what: String): Unit = {
-      val deadline = System.currentTimeMillis() + 120000
-      while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(200)
-      assert(cond, s"timed out waiting for $what")
-    }
     await(got.keys.exists(_._1 == 1L), "query 1 results")
     // erase the victim BETWEEN the two requests
     Seq(victim).toDF("doc_id").write.mode("append").parquet(tombDir)
-    writeReq(2L, 1)
+    landFile(Seq((2L, TextOps.PhraseQuery)).toDF("query_id", "phrase"),
+      dataDir, "req-001.parquet")
     await(got.keys.exists(_._1 == 2L), "query 2 results")
     q.stop()
     q.awaitTermination(30000)
@@ -216,22 +273,13 @@ class CurationStreamSpec extends AnyFunSuite {
         .map(r => ((qid, r.getLong(0)), r.getLong(1)))
     }.toMap
     val dataDir = Files.createTempDirectory("graft-proxserve-req").toString
-    def writeReqs(rows: Seq[(Long, String, String, Int)], i: Int): Unit = {
-      val tmp = Files.createTempDirectory("graft-proxserve-chunk").toString
-      rows.toDF("query_id", "a", "b", "slop")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.startsWith("part-")).head
-      Files.move(part.toPath,
-        new java.io.File(dataDir, f"req-$i%03d.parquet").toPath)
-      ()
-    }
-    writeReqs(reqs, 0)
+    landFile(reqs.toDF("query_id", "a", "b", "slop"), dataDir, "req-000.parquet")
     val got = scala.collection.concurrent.TrieMap.empty[(Long, Long), Long]
     val stream = spark.readStream
       .schema(reqs.toDF("query_id", "a", "b", "slop").schema)
       .option("maxFilesPerTrigger", "1").parquet(dataDir)
-    val q = CurationStream.proximityServeWithTombstones(stream, idx, tombDir) { b =>
+    val q = CurationStream.serve(stream, CurationStream.tombstoned(idx, tombDir,
+        TextOps.deleteListFromPositionalIndex)(TextOps.proximityServeBatch)) { b =>
       b.collect().foreach(r =>
         got.put((r.getLong(0), r.getLong(1)), r.getLong(2)))
     }
@@ -239,17 +287,13 @@ class CurationStreamSpec extends AnyFunSuite {
       .option("checkpointLocation",
         Files.createTempDirectory("graft-proxserve-ckpt").toString)
       .start()
-    def await(cond: => Boolean, what: String): Unit = {
-      val deadline = System.currentTimeMillis() + 120000
-      while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(200)
-      assert(cond, s"timed out waiting for $what")
-    }
     await(got.keys.exists(_._1 == 2L), "first request batch")
     // with an empty tombstone list, both queries equal the plain form
     assert(got.toMap == expected, s"${got.toMap}\nvs\n$expected")
     // erase the victim BETWEEN requests; the re-issued query misses it
     Seq(victim).toDF("doc_id").write.mode("append").parquet(tombDir)
-    writeReqs(Seq((3L, "window", "join", 5)), 1)
+    landFile(Seq((3L, "window", "join", 5)).toDF("query_id", "a", "b", "slop"),
+      dataDir, "req-001.parquet")
     await(got.keys.exists(_._1 == 3L), "post-erasure request")
     q.stop()
     q.awaitTermination(30000)
@@ -275,7 +319,7 @@ class CurationStreamSpec extends AnyFunSuite {
 
     // mixed chain lengths and gaps, plus one malformed request (sub-2
     // chain): served answers must equal the per-query form, and the
-    // malformed query_id must surface via onRejects — not vanish
+    // malformed query_id must surface on the rejects channel — not vanish
     val reqs = Seq(
       (1L, Seq("window", "join", "hash"), 8),
       (2L, Seq("window", "join"), 5),
@@ -286,42 +330,30 @@ class CurationStreamSpec extends AnyFunSuite {
           .map(r => ((qid, r.getLong(0)), r.getLong(1)))
     }.toMap
     val dataDir = Files.createTempDirectory("graft-snserve-req").toString
-    def writeReqs(rows: Seq[(Long, Seq[String], Int)], i: Int): Unit = {
-      val tmp = Files.createTempDirectory("graft-snserve-chunk").toString
-      rows.toDF("query_id", "terms", "gap")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.startsWith("part-")).head
-      Files.move(part.toPath,
-        new java.io.File(dataDir, f"req-$i%03d.parquet").toPath)
-      ()
-    }
-    writeReqs(reqs, 0)
+    landFile(reqs.toDF("query_id", "terms", "gap"), dataDir, "req-000.parquet")
     val got = scala.collection.concurrent.TrieMap.empty[(Long, Long), Long]
     val rejected = scala.collection.concurrent.TrieMap.empty[Long, Unit]
     val stream = spark.readStream
       .schema(reqs.toDF("query_id", "terms", "gap").schema)
       .option("maxFilesPerTrigger", "1").parquet(dataDir)
-    val q = CurationStream.spanNearServeWithTombstones(stream, idx, tombDir)(
+    val q = CurationStream.serve(stream, CurationStream.tombstoned(idx, tombDir,
+        TextOps.deleteListFromPositionalIndex)(TextOps.spanNearServeBatch))(
       b => b.collect().foreach(r =>
         got.put((r.getLong(0), r.getLong(1)), r.getLong(2))),
-      rej => rej.collect().foreach(r => rejected.put(r.getLong(0), ())))
+      (TextOps.spanNearServeRejects,
+        rej => rej.collect().foreach(r => rejected.put(r.getLong(0), ()))))
       .trigger(Trigger.ProcessingTime("500 milliseconds"))
       .option("checkpointLocation",
         Files.createTempDirectory("graft-snserve-ckpt").toString)
       .start()
-    def await(cond: => Boolean, what: String): Unit = {
-      val deadline = System.currentTimeMillis() + 120000
-      while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(200)
-      assert(cond, s"timed out waiting for $what")
-    }
     await(got.keys.exists(_._1 == 2L) && rejected.contains(9L),
       "first request batch + its reject")
     assert(got.toMap == expected, s"${got.toMap}\nvs\n$expected")
     assert(rejected.keySet == Set(9L), rejected.keySet.toString)
     // erase the victim BETWEEN requests; the re-issued query misses it
     Seq(victim).toDF("doc_id").write.mode("append").parquet(tombDir)
-    writeReqs(Seq((3L, TextOps.SpanNearTerms, TextOps.SpanNearGap)), 1)
+    landFile(Seq((3L, TextOps.SpanNearTerms, TextOps.SpanNearGap))
+      .toDF("query_id", "terms", "gap"), dataDir, "req-001.parquet")
     await(got.keys.exists(_._1 == 3L), "post-erasure request")
     q.stop()
     q.awaitTermination(30000)
@@ -354,41 +386,29 @@ class CurationStreamSpec extends AnyFunSuite {
           .map(r => ((qid, r.getLong(0)), r.getLong(1)))
     }.toMap
     val dataDir = Files.createTempDirectory("graft-coocserve-req").toString
-    def writeReqs(rows: Seq[(Long, Seq[String], Int)], i: Int): Unit = {
-      val tmp = Files.createTempDirectory("graft-coocserve-chunk").toString
-      rows.toDF("query_id", "terms", "win")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.startsWith("part-")).head
-      Files.move(part.toPath,
-        new java.io.File(dataDir, f"req-$i%03d.parquet").toPath)
-      ()
-    }
-    writeReqs(reqs, 0)
+    landFile(reqs.toDF("query_id", "terms", "win"), dataDir, "req-000.parquet")
     val got = scala.collection.concurrent.TrieMap.empty[(Long, Long), Long]
     val rejected = scala.collection.concurrent.TrieMap.empty[Long, Unit]
     val stream = spark.readStream
       .schema(reqs.toDF("query_id", "terms", "win").schema)
       .option("maxFilesPerTrigger", "1").parquet(dataDir)
-    val q = CurationStream.coocServeWithTombstones(stream, idx, tombDir)(
+    val q = CurationStream.serve(stream, CurationStream.tombstoned(idx, tombDir,
+        TextOps.deleteListFromPositionalIndex)(TextOps.coocServeBatch))(
       b => b.collect().foreach(r =>
         got.put((r.getLong(0), r.getLong(1)), r.getLong(2))),
-      rej => rej.collect().foreach(r => rejected.put(r.getLong(0), ())))
+      (TextOps.coocServeRejects,
+        rej => rej.collect().foreach(r => rejected.put(r.getLong(0), ()))))
       .trigger(Trigger.ProcessingTime("500 milliseconds"))
       .option("checkpointLocation",
         Files.createTempDirectory("graft-coocserve-ckpt").toString)
       .start()
-    def await(cond: => Boolean, what: String): Unit = {
-      val deadline = System.currentTimeMillis() + 120000
-      while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(200)
-      assert(cond, s"timed out waiting for $what")
-    }
     await(got.keys.exists(_._1 == 2L) && rejected.contains(9L),
       "first request batch + its reject")
     assert(got.toMap == expected, s"${got.toMap}\nvs\n$expected")
     assert(rejected.keySet == Set(9L), rejected.keySet.toString)
     Seq(victim).toDF("doc_id").write.mode("append").parquet(tombDir)
-    writeReqs(Seq((3L, TextOps.CoocTerms, TextOps.CoocWindow)), 1)
+    landFile(Seq((3L, TextOps.CoocTerms, TextOps.CoocWindow))
+      .toDF("query_id", "terms", "win"), dataDir, "req-001.parquet")
     await(got.keys.exists(_._1 == 3L), "post-erasure request")
     q.stop()
     q.awaitTermination(30000)
@@ -414,24 +434,16 @@ class CurationStreamSpec extends AnyFunSuite {
     Seq.empty[Long].toDF("doc_id").write.mode("overwrite").parquet(tombDir)
 
     val dataDir = Files.createTempDirectory("graft-bm25tomb-req").toString
-    def writeReq(qid: Long, i: Int): Unit = {
-      val tmp = Files.createTempDirectory("graft-bm25tomb-chunk").toString
-      Seq((qid, TextOps.Bm25Query)).toDF("query_id", "terms")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.startsWith("part-")).head
-      Files.move(part.toPath,
-        new java.io.File(dataDir, f"req-$i%03d.parquet").toPath)
-      ()
-    }
-    writeReq(1L, 0)
+    landFile(Seq((1L, TextOps.Bm25Query)).toDF("query_id", "terms"),
+      dataDir, "req-000.parquet")
 
     val got = scala.collection.concurrent.TrieMap
       .empty[(Long, Int), (Long, Double)]
     val schema = Seq((1L, Seq("x"))).toDF("query_id", "terms").schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(dataDir)
-    val q = CurationStream.bm25ServeWithTombstones(stream, idx, tombDir) { b =>
+    val q = CurationStream.serve(stream, CurationStream.tombstoned(idx, tombDir,
+        TextOps.deleteListFromBm25Index)(TextOps.bm25ServeBatch(_, _))) { b =>
       b.collect().foreach(r =>
         got.put((r.getLong(0), r.getInt(1)), (r.getLong(2), r.getDouble(3))))
     }
@@ -439,15 +451,11 @@ class CurationStreamSpec extends AnyFunSuite {
       .option("checkpointLocation",
         Files.createTempDirectory("graft-bm25tomb-ckpt").toString)
       .start()
-    def await(cond: => Boolean, what: String): Unit = {
-      val deadline = System.currentTimeMillis() + 120000
-      while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(200)
-      assert(cond, s"timed out waiting for $what")
-    }
     await(got.keys.exists(_._1 == 1L), "query 1 results")
     // erase the victim BETWEEN the two requests — no restart, no rebuild
     Seq(victim).toDF("doc_id").write.mode("append").parquet(tombDir)
-    writeReq(2L, 1)
+    landFile(Seq((2L, TextOps.Bm25Query)).toDF("query_id", "terms"),
+      dataDir, "req-001.parquet")
     await(got.keys.exists(_._1 == 2L), "query 2 results")
     q.stop()
     q.awaitTermination(30000)
@@ -481,25 +489,16 @@ class CurationStreamSpec extends AnyFunSuite {
     Seq.empty[Long].toDF("vec_id").write.mode("overwrite").parquet(tombDir)
 
     val dataDir = Files.createTempDirectory("graft-anntomb-req").toString
-    def writeReq(qid: Long, i: Int): Unit = {
-      val tmp = Files.createTempDirectory("graft-anntomb-chunk").toString
-      corpus.filter(col("vec_id") === 0L)
-        .select(lit(qid).as("vec_id"), col("embedding"), col("label"))
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.startsWith("part-")).head
-      Files.move(part.toPath,
-        new java.io.File(dataDir, f"req-$i%03d.parquet").toPath)
-      ()
-    }
-    writeReq(20001L, 0)
+    def req(qid: Long) = corpus.filter(col("vec_id") === 0L)
+      .select(lit(qid).as("vec_id"), col("embedding"), col("label"))
+    landFile(req(20001L), dataDir, "req-000.parquet")
 
     val got = scala.collection.concurrent.TrieMap
       .empty[(Long, Int), (Long, Double)]
     val stream = spark.readStream.schema(qvec.schema)
       .option("maxFilesPerTrigger", "1").parquet(dataDir)
-    val q = CurationStream.annServeWithTombstones(
-        stream, corpus, idx, tombDir, sub, 5) { b =>
+    val q = CurationStream.serve(stream, CurationStream.tombstoned(idx, tombDir,
+        Forget.pruneAnnIndexList)(Similarity.ivfPqServe(_, corpus, _, sub, 5))) { b =>
       b.collect().foreach(r =>
         got.put((r.getLong(0), r.getInt(1)), (r.getLong(2), r.getDouble(3))))
     }
@@ -507,14 +506,9 @@ class CurationStreamSpec extends AnyFunSuite {
       .option("checkpointLocation",
         Files.createTempDirectory("graft-anntomb-ckpt").toString)
       .start()
-    def await(cond: => Boolean, what: String): Unit = {
-      val deadline = System.currentTimeMillis() + 120000
-      while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(200)
-      assert(cond, s"timed out waiting for $what")
-    }
     await(got.keys.exists(_._1 == 20001L), "query 1 results")
     Seq(victim).toDF("vec_id").write.mode("append").parquet(tombDir)
-    writeReq(20002L, 1)
+    landFile(req(20002L), dataDir, "req-001.parquet")
     await(got.keys.exists(_._1 == 20002L), "query 2 results")
     q.stop()
     q.awaitTermination(30000)
@@ -549,23 +543,15 @@ class CurationStreamSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
 
     val dataDir = Files.createTempDirectory("graft-annserve-req").toString
-    def writeChunk(df: DataFrame, i: Int): Unit = {
-      val tmp = Files.createTempDirectory("graft-annserve-chunk").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.startsWith("part-")).head
-      Files.move(part.toPath,
-        new java.io.File(dataDir, f"req-$i%03d.parquet").toPath)
-      ()
-    }
-    writeChunk(queries.filter(col("vec_id") < 10003L), 0)
-    writeChunk(queries.filter(col("vec_id") >= 10003L), 1)
+    landFile(queries.filter(col("vec_id") < 10003L), dataDir, "req-000.parquet")
+    landFile(queries.filter(col("vec_id") >= 10003L), dataDir, "req-001.parquet")
 
     val got = scala.collection.concurrent.TrieMap
       .empty[(Long, Int), (Long, Double)]
     val stream = spark.readStream.schema(queries.schema)
       .option("maxFilesPerTrigger", "1").parquet(dataDir)
-    val q = CurationStream.annServe(stream, corpus, idx, sub, 5) { b =>
+    val q = CurationStream.serve(stream,
+        Similarity.ivfPqServe(_, corpus, idx, sub, 5)) { b =>
       b.collect().foreach(r =>
         got.put((r.getLong(0), r.getInt(1)), (r.getLong(2), r.getDouble(3))))
     }
@@ -602,24 +588,17 @@ class CurationStreamSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
 
     val dataDir = Files.createTempDirectory("graft-annbudget-req").toString
-    def writeChunk(df: org.apache.spark.sql.DataFrame, i: Int): Unit = {
-      val tmp = Files.createTempDirectory("graft-annbudget-chunk").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.startsWith("part-")).head
-      Files.move(part.toPath,
-        new java.io.File(dataDir, f"req-$i%03d.parquet").toPath)
-      ()
-    }
-    writeChunk(queries.filter(col("vec_id") < 10002L), 0)
-    writeChunk(queries.filter(col("vec_id") >= 10002L && col("vec_id") < 10004L), 1)
-    writeChunk(queries.filter(col("vec_id") >= 10004L), 2)
+    landFile(queries.filter(col("vec_id") < 10002L), dataDir, "req-000.parquet")
+    landFile(queries.filter(col("vec_id") >= 10002L && col("vec_id") < 10004L),
+      dataDir, "req-001.parquet")
+    landFile(queries.filter(col("vec_id") >= 10004L), dataDir, "req-002.parquet")
 
     val got = scala.collection.concurrent.TrieMap
       .empty[(Long, Int), (Long, Double)]
     val stream = spark.readStream.schema(queries.schema)
       .option("maxFilesPerTrigger", "1").parquet(dataDir)
-    val q = CurationStream.annServeBudgeted(stream, corpus, idx, sub, 5) { b =>
+    val q = CurationStream.serve(stream,
+        Similarity.ivfPqServeBudgeted(_, corpus, idx, sub, 5)) { b =>
       b.collect().foreach(r =>
         got.put((r.getLong(0), r.getInt(1)), (r.getLong(2), r.getDouble(3))))
     }
@@ -643,7 +622,7 @@ class CurationStreamSpec extends AnyFunSuite {
     // 1 + 5 = 6 <= 6 -> BOTH kept. Erasing doc 6 (which holds NEITHER
     // term) shrinks the corpus to n = 5, budget 5 — hot's cum 6 > 5, so
     // the same request now drops "hot": relative price rose (df/n
-    // 5/6 -> 5/5) with no change to the term itself. The twin must
+    // 5/6 -> 5/5) with no change to the term itself. The server must
     // re-price per batch against the pruned index.
     val docs = Seq(
       (1L, "stop hot mid rare"),
@@ -657,23 +636,14 @@ class CurationStreamSpec extends AnyFunSuite {
     val tombDir = Files.createTempDirectory("graft-bmbudtomb-list").toString
     Seq.empty[Long].toDF("doc_id").write.mode("overwrite").parquet(tombDir)
     val dataDir = Files.createTempDirectory("graft-bmbudtomb-req").toString
-    def writeReq(qid: Long, i: Int): Unit = {
-      val tmp = Files.createTempDirectory("graft-bmbudtomb-chunk").toString
-      Seq((qid, req)).toDF("query_id", "terms")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.startsWith("part-")).head
-      Files.move(part.toPath,
-        new java.io.File(dataDir, f"req-$i%03d.parquet").toPath)
-      ()
-    }
-    writeReq(1L, 0)
+    landFile(Seq((1L, req)).toDF("query_id", "terms"), dataDir, "req-000.parquet")
     val got = scala.collection.concurrent.TrieMap
       .empty[(Long, Int), (Long, Double)]
     val schema = Seq((1L, Seq("x"))).toDF("query_id", "terms").schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(dataDir)
-    val q = CurationStream.bm25ServeBudgetedWithTombstones(stream, idx, tombDir) { b =>
+    val q = CurationStream.serve(stream, CurationStream.tombstoned(idx, tombDir,
+        TextOps.deleteListFromBm25Index)(TextOps.bm25ServeBatchBudgeted(_, _))) { b =>
       b.collect().foreach(r =>
         got.put((r.getLong(0), r.getInt(1)), (r.getLong(2), r.getDouble(3))))
     }
@@ -681,14 +651,9 @@ class CurationStreamSpec extends AnyFunSuite {
       .option("checkpointLocation",
         Files.createTempDirectory("graft-bmbudtomb-ckpt").toString)
       .start()
-    def await(cond: => Boolean, what: String): Unit = {
-      val deadline = System.currentTimeMillis() + 120000
-      while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(200)
-      assert(cond, s"timed out waiting for $what")
-    }
     await(got.keys.exists(_._1 == 1L), "query 1 results")
     Seq(6L).toDF("doc_id").write.mode("append").parquet(tombDir)
-    writeReq(2L, 1)
+    landFile(Seq((2L, req)).toDF("query_id", "terms"), dataDir, "req-001.parquet")
     await(got.keys.exists(_._1 == 2L), "query 2 results")
     q.stop()
     q.awaitTermination(30000)
@@ -742,7 +707,7 @@ class CurationStreamSpec extends AnyFunSuite {
     ).toDF("query_id", "terms", "gap")
     // the explicit per-family decision, pinned: the positional budget is
     // a GATE (refuse + explain), never a term strip — so the expected
-    // serve is the UNGUARDED batch twin over only the clean request
+    // serve is the UNGUARDED batch server over only the clean request
     val expected = TextOps.spanNearServeBatch(
       reqs.filter(col("query_id") === 1L), idx).collect().map(_.toSeq).toSeq
     assert(expected.nonEmpty, "the clean request must actually match")
@@ -751,23 +716,20 @@ class CurationStreamSpec extends AnyFunSuite {
     val theOcc = idx.postings.filter(col("t") === "the").count()
     assert(theOcc == 13L)
 
+    val guard = CurationStream.HotTermGuard(stop)
     val dataDir = Files.createTempDirectory("graft-snguard-req").toString
-    val tmp = Files.createTempDirectory("graft-snguard-chunk").toString
-    reqs.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .filter(_.getName.startsWith("part-")).head
-    Files.move(part.toPath, new java.io.File(dataDir, "req-000.parquet").toPath)
+    landFile(reqs, dataDir, "req-000.parquet")
 
     val served = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
     val rejected = scala.collection.mutable.ArrayBuffer.empty[Long]
     val refused = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
     val stream = spark.readStream.schema(reqs.schema)
       .option("maxFilesPerTrigger", "1").parquet(dataDir)
-    val q = CurationStream.spanNearServeGuarded(stream, idx, stop)(
+    val q = CurationStream.serve(stream, guard(TextOps.spanNearServeBatch(_, idx)))(
       b => served ++= b.collect().map(_.toSeq),
-      r => rejected ++= r.collect().map(_.getLong(0)),
-      l => refused ++= l.collect().map(r =>
-        (r.getLong(0), r.getString(1), r.getLong(2))))
+      (TextOps.spanNearServeRejects, r => rejected ++= r.collect().map(_.getLong(0))),
+      guard.refused(l => refused ++= l.collect().map(r =>
+        (r.getLong(0), r.getString(1), r.getLong(2)))))
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation",
         Files.createTempDirectory("graft-snguard-ckpt").toString)
@@ -780,9 +742,10 @@ class CurationStreamSpec extends AnyFunSuite {
     assert(refused.toSeq == Seq((2L, "the", theOcc)),
       "the operator is told the hot term AND its posting volume")
 
-    // the unordered family carries the same contract (coocServeGuarded):
-    // clean serves, hot refuses with the identical (query_id, t, occ)
-    // explanation, sub-2-distinct stays malformed
+    // the unordered family carries the same contract (the same guard
+    // around coocServeBatch): clean serves, hot refuses with the
+    // identical (query_id, t, occ) explanation, sub-2-distinct stays
+    // malformed
     val creqs = Seq(
       (1L, Seq("window", "join"), 6),
       (2L, Seq("the", "join"), 5),
@@ -791,21 +754,17 @@ class CurationStreamSpec extends AnyFunSuite {
       creqs.filter(col("query_id") === 1L), idx).collect().map(_.toSeq).toSeq
     assert(cexpected.nonEmpty)
     val cDir = Files.createTempDirectory("graft-coocguard-req").toString
-    val ctmp = Files.createTempDirectory("graft-coocguard-chunk").toString
-    creqs.coalesce(1).write.mode("overwrite").parquet(ctmp)
-    val cpart = new java.io.File(ctmp).listFiles()
-      .filter(_.getName.startsWith("part-")).head
-    Files.move(cpart.toPath, new java.io.File(cDir, "req-000.parquet").toPath)
+    landFile(creqs, cDir, "req-000.parquet")
     val cServed = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
     val cRejected = scala.collection.mutable.ArrayBuffer.empty[Long]
     val cRefused = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
     val cStream = spark.readStream.schema(creqs.schema)
       .option("maxFilesPerTrigger", "1").parquet(cDir)
-    val cq = CurationStream.coocServeGuarded(cStream, idx, stop)(
+    val cq = CurationStream.serve(cStream, guard(TextOps.coocServeBatch(_, idx)))(
       b => cServed ++= b.collect().map(_.toSeq),
-      r => cRejected ++= r.collect().map(_.getLong(0)),
-      l => cRefused ++= l.collect().map(r =>
-        (r.getLong(0), r.getString(1), r.getLong(2))))
+      (TextOps.coocServeRejects, r => cRejected ++= r.collect().map(_.getLong(0))),
+      guard.refused(l => cRefused ++= l.collect().map(r =>
+        (r.getLong(0), r.getString(1), r.getLong(2)))))
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation",
         Files.createTempDirectory("graft-coocguard-ckpt").toString)
@@ -828,28 +787,19 @@ class CurationStreamSpec extends AnyFunSuite {
     val mkQ = (qid: Long) => corpus.filter(col("vec_id") === 0L)
       .select(lit(qid).as("vec_id"), col("embedding"), col("label"))
     // erase 30 vectors between the two requests: occupancies shrink, the
-    // walk re-prices, and serving must equal the budgeted batch twin
+    // walk re-prices, and serving must equal the budgeted batch server
     // over the pruned index (whatever the new verdicts are)
     val victims = (100L to 129L)
     val tombDir = Files.createTempDirectory("graft-annbudtomb-list").toString
     Seq.empty[Long].toDF("vec_id").write.mode("overwrite").parquet(tombDir)
     val dataDir = Files.createTempDirectory("graft-annbudtomb-req").toString
-    def writeReq(qid: Long, i: Int): Unit = {
-      val tmp = Files.createTempDirectory("graft-annbudtomb-chunk").toString
-      mkQ(qid).coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.startsWith("part-")).head
-      Files.move(part.toPath,
-        new java.io.File(dataDir, f"req-$i%03d.parquet").toPath)
-      ()
-    }
-    writeReq(20001L, 0)
+    landFile(mkQ(20001L), dataDir, "req-000.parquet")
     val got = scala.collection.concurrent.TrieMap
       .empty[(Long, Int), (Long, Double)]
     val stream = spark.readStream.schema(mkQ(0L).schema)
       .option("maxFilesPerTrigger", "1").parquet(dataDir)
-    val q = CurationStream.annServeBudgetedWithTombstones(
-      stream, corpus, idx, tombDir, sub, 5) { b =>
+    val q = CurationStream.serve(stream, CurationStream.tombstoned(idx, tombDir,
+        Forget.pruneAnnIndexList)(Similarity.ivfPqServeBudgeted(_, corpus, _, sub, 5))) { b =>
       b.collect().foreach(r =>
         got.put((r.getLong(0), r.getInt(1)), (r.getLong(2), r.getDouble(3))))
     }
@@ -857,14 +807,9 @@ class CurationStreamSpec extends AnyFunSuite {
       .option("checkpointLocation",
         Files.createTempDirectory("graft-annbudtomb-ckpt").toString)
       .start()
-    def await(cond: => Boolean, what: String): Unit = {
-      val deadline = System.currentTimeMillis() + 120000
-      while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(200)
-      assert(cond, s"timed out waiting for $what")
-    }
     await(got.keys.exists(_._1 == 20001L), "query 1 results")
     victims.toDF("vec_id").write.mode("append").parquet(tombDir)
-    writeReq(20002L, 1)
+    landFile(mkQ(20002L), dataDir, "req-001.parquet")
     await(got.keys.exists(_._1 == 20002L), "query 2 results")
     q.stop()
     q.awaitTermination(30000)
@@ -903,12 +848,7 @@ class CurationStreamSpec extends AnyFunSuite {
     val ids = docs.select(col("doc_id")).collect().map(_.getLong(0)).sorted
     val base = System.currentTimeMillis() - 3600000L
     def writeChunk(df: DataFrame, i: Int): Unit = {
-      val tmp = Files.createTempDirectory("graft-curstream-chunk").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.startsWith("part-")).head
-      val dest = new java.io.File(dataDir, f"chunk-$i%03d.parquet")
-      Files.move(part.toPath, dest.toPath)
+      val dest = landFile(df, dataDir, f"chunk-$i%03d.parquet")
       assert(dest.setLastModified(base + i * 60000L))
     }
     val (c1, c2) = (ids(ids.length / 3), ids(2 * ids.length / 3))
@@ -996,13 +936,8 @@ class CurationStreamSpec extends AnyFunSuite {
       val dataDir = Files.createTempDirectory("graft-tinybatch-data").toString
       val base = System.currentTimeMillis() - 3600000L
       chunks.zipWithIndex.foreach { case (chunk, i) =>
-        val tmp = Files.createTempDirectory("graft-tinybatch-chunk").toString
-        docs.filter(col("doc_id").isin(chunk: _*)).coalesce(1)
-          .write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.startsWith("part-")).head
-        val dest = new java.io.File(dataDir, f"chunk-$i%04d.parquet")
-        Files.move(part.toPath, dest.toPath)
+        val dest = landFile(docs.filter(col("doc_id").isin(chunk: _*)),
+          dataDir, f"chunk-$i%04d.parquet")
         assert(dest.setLastModified(base + i * 1000L))
       }
       val got = scala.collection.concurrent.TrieMap
@@ -1200,12 +1135,7 @@ class CurationStreamSpec extends AnyFunSuite {
     val ids = shard.select(col("vec_id")).collect().map(_.getLong(0)).sorted
     val base = System.currentTimeMillis() - 3600000L
     def writeChunk(df: DataFrame, i: Int): Unit = {
-      val tmp = Files.createTempDirectory("graft-semgate-chunk").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.startsWith("part-")).head
-      val dest = new java.io.File(dataDir, f"chunk-$i%03d.parquet")
-      Files.move(part.toPath, dest.toPath)
+      val dest = landFile(df, dataDir, f"chunk-$i%03d.parquet")
       assert(dest.setLastModified(base + i * 60000L))
     }
     // vec_id-ordered ingest across micro-batches: the house precondition
@@ -1291,12 +1221,7 @@ class CurationStreamSpec extends AnyFunSuite {
     val ids = docs.select(col("doc_id")).collect().map(_.getLong(0)).sorted
     val base = System.currentTimeMillis() - 3600000L
     def writeChunk(df: DataFrame, i: Int): Unit = {
-      val tmp = Files.createTempDirectory("graft-packcrash-chunk").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.startsWith("part-")).head
-      val dest = new java.io.File(dataDir, f"chunk-$i%03d.parquet")
-      Files.move(part.toPath, dest.toPath)
+      val dest = landFile(df, dataDir, f"chunk-$i%03d.parquet")
       assert(dest.setLastModified(base + i * 60000L))
     }
     val mid = ids(ids.length / 2)
@@ -1353,12 +1278,7 @@ class CurationStreamSpec extends AnyFunSuite {
     val ids = docs.select(col("doc_id")).collect().map(_.getLong(0)).sorted
     val base = System.currentTimeMillis() - 3600000L
     def writeChunk(df: DataFrame, i: Int): Unit = {
-      val tmp = Files.createTempDirectory("graft-packstream-chunk").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.startsWith("part-")).head
-      val dest = new java.io.File(dataDir, f"chunk-$i%03d.parquet")
-      Files.move(part.toPath, dest.toPath)
+      val dest = landFile(df, dataDir, f"chunk-$i%03d.parquet")
       assert(dest.setLastModified(base + i * 60000L))
     }
     val (c1, c2) = (ids(ids.length / 3), ids(2 * ids.length / 3))
@@ -1492,12 +1412,7 @@ class CurationStreamSpec extends AnyFunSuite {
     val base = System.currentTimeMillis() - 3600000L
     var i = 0
     def land(df: DataFrame): Unit = {
-      val tmp = Files.createTempDirectory("graft-simstream-chunk").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.startsWith("part-")).head
-      val dest = new java.io.File(dataDir, f"chunk-$i%03d.parquet")
-      Files.move(part.toPath, dest.toPath)
+      val dest = landFile(df, dataDir, f"chunk-$i%03d.parquet")
       assert(dest.setLastModified(base + i * 60000L))
       i += 1
     }
@@ -1546,14 +1461,9 @@ class CurationStreamSpec extends AnyFunSuite {
     val ckpt = Files.createTempDirectory("graft-simhzn-ckpt").toString
     var chunk = 0
     def land(rows: (Long, String, Long)*): Unit = {
-      val tmp = Files.createTempDirectory("graft-simhzn-chunk").toString
-      rows.toSeq.toDF("doc_id", "text", "ms")
-        .withColumn("ts", (col("ms") / 1000.0).cast("timestamp")).drop("ms")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.startsWith("part-")).head
-      val dest = new java.io.File(dataDir, f"chunk-$chunk%03d.parquet")
-      Files.move(part.toPath, dest.toPath)
+      val dest = landFile(rows.toSeq.toDF("doc_id", "text", "ms")
+        .withColumn("ts", (col("ms") / 1000.0).cast("timestamp")).drop("ms"),
+        dataDir, f"chunk-$chunk%03d.parquet")
       assert(dest.setLastModified(System.currentTimeMillis() - 3600000L + chunk * 60000L))
       chunk += 1
     }
@@ -1687,14 +1597,9 @@ class CurationStreamSpec extends AnyFunSuite {
     val ckpt = Files.createTempDirectory("graft-curstream-hzn-ckpt").toString
     var chunk = 0
     def land(rows: (Long, String, Long)*): Unit = {
-      val tmp = Files.createTempDirectory("graft-hzn-chunk").toString
-      rows.toSeq.toDF("doc_id", "text", "ms")
-        .withColumn("ts", (col("ms") / 1000.0).cast("timestamp")).drop("ms")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.startsWith("part-")).head
-      val dest = new java.io.File(dataDir, f"chunk-$chunk%03d.parquet")
-      Files.move(part.toPath, dest.toPath)
+      val dest = landFile(rows.toSeq.toDF("doc_id", "text", "ms")
+        .withColumn("ts", (col("ms") / 1000.0).cast("timestamp")).drop("ms"),
+        dataDir, f"chunk-$chunk%03d.parquet")
       // pin mtimes so the file source's one-file-per-batch order is the
       // landing order, not a same-millisecond race
       assert(dest.setLastModified(System.currentTimeMillis() - 3600000L + chunk * 60000L))
@@ -1753,12 +1658,7 @@ class CurationStreamSpec extends AnyFunSuite {
     val base = System.currentTimeMillis() - 3600000L
     var i = 0
     def land(df: DataFrame): Unit = {
-      val tmp = Files.createTempDirectory("graft-mediastream-chunk").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.startsWith("part-")).head
-      val dest = new java.io.File(dataDir, f"chunk-$i%03d.parquet")
-      Files.move(part.toPath, dest.toPath)
+      val dest = landFile(df, dataDir, f"chunk-$i%03d.parquet")
       assert(dest.setLastModified(base + i * 60000L))
       i += 1
     }
@@ -1808,14 +1708,9 @@ class CurationStreamSpec extends AnyFunSuite {
       graft.operators.MediaCodec.ppmHeader(8, 8) ++
         (0 until 64).flatMap(p => Seq.fill(3)(lum(p).toByte)).toArray
     def land(rows: (Long, String, Array[Byte], Long)*): Unit = {
-      val tmp = Files.createTempDirectory("graft-mediahzn-chunk").toString
-      rows.toSeq.toDF("asset_id", "kind", "data", "ms")
-        .withColumn("ts", (col("ms") / 1000.0).cast("timestamp")).drop("ms")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.startsWith("part-")).head
-      val dest = new java.io.File(dataDir, f"chunk-$chunk%03d.parquet")
-      Files.move(part.toPath, dest.toPath)
+      val dest = landFile(rows.toSeq.toDF("asset_id", "kind", "data", "ms")
+        .withColumn("ts", (col("ms") / 1000.0).cast("timestamp")).drop("ms"),
+        dataDir, f"chunk-$chunk%03d.parquet")
       assert(dest.setLastModified(System.currentTimeMillis() - 3600000L + chunk * 60000L))
       chunk += 1
     }
@@ -1871,13 +1766,8 @@ class CurationStreamSpec extends AnyFunSuite {
     val base = System.currentTimeMillis() - 3600000L
     var i = 0
     def land(rows: (Long, String, String)*): Unit = {
-      val tmp = Files.createTempDirectory("graft-forgetcanon-chunk").toString
-      rows.toSeq.toDF("doc_id", "text", "op")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.startsWith("part-")).head
-      val dest = new java.io.File(dataDir, f"chunk-$i%03d.parquet")
-      Files.move(part.toPath, dest.toPath)
+      val dest = landFile(rows.toSeq.toDF("doc_id", "text", "op"),
+        dataDir, f"chunk-$i%03d.parquet")
       assert(dest.setLastModified(base + i * 60000L))
       i += 1
     }
@@ -1936,13 +1826,8 @@ class CurationStreamSpec extends AnyFunSuite {
     val base = System.currentTimeMillis() - 3600000L
     var i = 0
     def land(rows: (Long, String, String)*): Unit = {
-      val tmp = Files.createTempDirectory("graft-forgetsim-chunk").toString
-      rows.toSeq.toDF("doc_id", "text", "op")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.startsWith("part-")).head
-      val dest = new java.io.File(dataDir, f"chunk-$i%03d.parquet")
-      Files.move(part.toPath, dest.toPath)
+      val dest = landFile(rows.toSeq.toDF("doc_id", "text", "op"),
+        dataDir, f"chunk-$i%03d.parquet")
       assert(dest.setLastModified(base + i * 60000L))
       i += 1
     }
@@ -1984,13 +1869,8 @@ class CurationStreamSpec extends AnyFunSuite {
     val base = System.currentTimeMillis() - 3600000L
     var i = 0
     def land(rows: (Long, String, Array[Byte], String)*): Unit = {
-      val tmp = Files.createTempDirectory("graft-forgetmedia-chunk").toString
-      rows.toSeq.toDF("asset_id", "kind", "data", "op")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.startsWith("part-")).head
-      val dest = new java.io.File(dataDir, f"chunk-$i%03d.parquet")
-      Files.move(part.toPath, dest.toPath)
+      val dest = landFile(rows.toSeq.toDF("asset_id", "kind", "data", "op"),
+        dataDir, f"chunk-$i%03d.parquet")
       assert(dest.setLastModified(base + i * 60000L))
       i += 1
     }
@@ -2032,13 +1912,8 @@ class CurationStreamSpec extends AnyFunSuite {
     val base = System.currentTimeMillis() - 3600000L
     var i = 0
     def land(rows: (Long, String, Array[Float], String)*): Unit = {
-      val tmp = Files.createTempDirectory("graft-forgetsem-chunk").toString
-      rows.toSeq.toDF("vec_id", "label", "embedding", "op")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.startsWith("part-")).head
-      val dest = new java.io.File(dataDir, f"chunk-$i%03d.parquet")
-      Files.move(part.toPath, dest.toPath)
+      val dest = landFile(rows.toSeq.toDF("vec_id", "label", "embedding", "op"),
+        dataDir, f"chunk-$i%03d.parquet")
       assert(dest.setLastModified(base + i * 60000L))
       i += 1
     }

@@ -62,6 +62,25 @@ class HealthSpec extends AnyFunSuite {
     } finally srv.close()
   }
 
+  test("every route answers only its exact path: /stopwatch and /isalivex are 404, the stop hook never runs") {
+    @volatile var stopped = false
+    val srv = Health.serve(
+      alive = () => true, ready = () => true,
+      stopHook = () => stopped = true,
+      extraRoutes = Map("/custom" -> (() => (200, "CUSTOM RESPONSE"))))
+    try {
+      srv.markReady()
+      for (path <- Seq("/stopwatch", "/stop/x", "/isalivex", "/isready/",
+                       "/metricsz", "/customer", "/"))
+        assert(get(srv.port, path)._1 == 404, s"$path must 404")
+      assert(!stopped, "a near-miss path must never run the stop hook")
+      assert(get(srv.port, "/isready") == (200, "READY"))
+      assert(get(srv.port, "/custom") == (200, "CUSTOM RESPONSE"))
+      // a query string still reaches the exact route
+      assert(get(srv.port, "/isalive?probe=1") == (200, "ALIVE"))
+    } finally srv.close()
+  }
+
   test("/stop drain is bounded: a hung hook gets 503 within the timeout (PreStopHook.kt:52-67)") {
     val hungForever = new java.util.concurrent.CountDownLatch(1)
     val srv = Health.serve(
