@@ -983,7 +983,8 @@ object CurationStream {
     * the request stream is chopped, and a replayed batch re-emits
     * identical rows (at-least-once sink semantics).
     *
-    * Per trigger: an empty micro-batch calls nothing; otherwise
+    * Per trigger the request batch is read once (persisted for the
+    * trigger): an empty micro-batch calls nothing; otherwise
     * `onBatch` receives `answer(batch)`, then each side channel in the
     * order given computes its rows from the request batch and hands them
     * to its consumer only when they are non-empty. A channel not passed
@@ -996,14 +997,19 @@ object CurationStream {
       : DataStreamWriter[Row] =
     queries.writeStream.outputMode("append")
       .foreachBatch { (b: DataFrame, _: Long) =>
-        if (!b.isEmpty) {
-          onBatch(answer(b))
-          sides.foreach { case (rows, consume) =>
-            val r = rows(b)
-            if (!r.isEmpty) consume(r)
+        // persisted for the trigger, as Fanout.route does: the emptiness
+        // check, `answer`'s jobs and every side channel read the request
+        // files once
+        b.persist()
+        try {
+          if (!b.isEmpty) {
+            onBatch(answer(b))
+            sides.foreach { case (rows, consume) =>
+              val r = rows(b)
+              if (!r.isEmpty) consume(r)
+            }
           }
-        }
-        ()
+        } finally { b.unpersist(); () }
       }
 
   /** TOMBSTONE-AWARE answering — erasure reaches the serving layer

@@ -8,14 +8,11 @@ import org.apache.spark.sql.SparkSession
   * the rapid (application_up, the enriched pong), then drains through the
   * same preStop path a platform would hit.
   *
-  * Run: `tools/run.sh graft.streaming.ExampleMain` — add `--fanout` to run
-  * the whole app as ONE read-once streaming query (the single-scan fanout
-  * mode; per-river message counters appear on /metrics).
+  * Run: `tools/run.sh graft.streaming.ExampleMain`
   */
 object ExampleMain {
 
   def main(args: Array[String]): Unit = {
-    val fanout = args.contains("--fanout")
     val spark = graft.GraftSession.tune(SparkSession.builder()
       .master("local[4]")
       .appName("graft-example")
@@ -27,8 +24,7 @@ object ExampleMain {
 
     val wired = RapidApplication.createWired(
       spark, appName = "example-app",
-      instanceId = java.util.UUID.randomUUID().toString,
-      fanout = fanout)
+      instanceId = java.util.UUID.randomUUID().toString)
     // close() in finally: the probe server's dispatcher is a non-daemon
     // thread, so an exception that skipped close would leave a headless JVM
     try {

@@ -21,14 +21,17 @@ import graft.messages.{River, Routed}
   * means R subscriptions, R topic scans, and R checkpoints per application —
   * R× source cost at a 100 TB topic.
   *
-  * This is the single-scan form: ONE streaming query per rapid. Its
-  * foreachBatch persists the micro-batch, routes every registered river's
-  * 4-way split off the in-memory rows, hands each river's replies to the
-  * sink, then unpersists — so the source is scanned once per micro-batch no
-  * matter how many rivers are registered (SURVEY §4 item 2). Each river
-  * re-parses its own schema-pruned projection off the cached rows: CPU over
+  * This is the single-scan form, and the only way a stateless river runs:
+  * ONE streaming query per rapid, on Kafka ([[KafkaRapid.run]]) and in
+  * memory ([[MemoryRapid]]) alike. Its foreachBatch persists the
+  * micro-batch, routes every registered river's 4-way split off the
+  * in-memory rows, hands each river's replies to the sink, then
+  * unpersists — so the source is scanned once per micro-batch no matter
+  * how many rivers are registered (SURVEY §4 item 2). Each river re-parses
+  * its own schema-pruned projection off the cached rows: CPU over
   * memory-resident rows, not another source scan, and each river keeps its
-  * own fast-path parse exactly as in the per-query mode.
+  * own fast-path parse exactly as [[River.attach]] gives it on a stream of
+  * its own.
   *
   * The river plans are built and analyzed ONCE per query, not per trigger.
   * The first trigger for a (registration list, batch schema, session)
@@ -49,8 +52,9 @@ import graft.messages.{River, Routed}
   * Metric granularity trade-off: per-river ROUTING COUNTS survive (each
   * branch carries an Observation, [[routeBatchObserved]]), but batch TIMING
   * is whole-rapid — the rivers execute as one fused action, so
-  * [[Timers]]-style on_packet_seconds covers the batch, not one river.
-  * Apps needing per-river wall-clock keep the per-river-query mode.
+  * [[Timers]]-style on_packet_seconds covers the batch, not one river. The
+  * per-river figure is `est_busy_nanos`, each river's apportioned share of
+  * the batch wall ([[attributeCost]]).
   */
 object Fanout {
 

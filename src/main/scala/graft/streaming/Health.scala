@@ -2,7 +2,8 @@ package graft.streaming
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.{CompletableFuture, ExecutionException, TimeUnit, TimeoutException}
+import java.util.concurrent.{CompletableFuture, ExecutionException, ExecutorService, Executors,
+  TimeUnit, TimeoutException}
 import java.util.concurrent.atomic.AtomicBoolean
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
@@ -33,13 +34,13 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 object Health {
 
   final class Server private[Health] (private[Health] val http: HttpServer,
-      ready: AtomicBoolean) {
+      workers: ExecutorService, ready: AtomicBoolean) {
     def port: Int = http.getAddress.getPort
     /** Readiness gate — set true once rivers are started (the reference's
       * ApplicationStarted monitor flip, KtorApplication.kt:104-110).
       */
     def markReady(): Unit = ready.set(true)
-    def close(): Unit = http.stop(0)
+    def close(): Unit = { http.stop(0); workers.shutdownNow(); () }
   }
 
   def serve(
@@ -64,6 +65,15 @@ object Health {
       port: Int = 0): Server = {
     val readyToggle = new AtomicBoolean(false)
     val http = HttpServer.create(new InetSocketAddress(port), 0)
+    // Handlers run on a small pool, not the server's one dispatcher
+    // thread: /stop blocks its worker for the whole drain, and the probes
+    // must keep answering meanwhile (readiness reads 503 while draining).
+    val workers = Executors.newFixedThreadPool(4, (r: Runnable) => {
+      val t = new Thread(r, "graft-health")
+      t.setDaemon(true)
+      t
+    })
+    http.setExecutor(workers)
 
     def respond(x: HttpExchange, code: Int, body: String): Unit = {
       val bytes = body.getBytes(StandardCharsets.UTF_8)
@@ -79,9 +89,10 @@ object Health {
       readyToggle.set(false)
       // The drain is BOUNDED like the reference's PreStopHook (30 s wait for
       // shutdown-complete, PreStopHook.kt:52-67): the hook runs on its own
-      // daemon thread so a hung drain cannot hold this HTTP worker — on
-      // timeout the hook keeps draining in the background and the probe gets
-      // a 503 (the reference logs and returns; kubelet proceeds to SIGTERM).
+      // daemon thread so a hung drain cannot hold this HTTP worker past the
+      // window — on timeout the hook keeps draining in the background and
+      // the probe gets a 503 (the reference logs and returns; kubelet
+      // proceeds to SIGTERM).
       val done = new CompletableFuture[Unit]()
       val drain = new Thread(() =>
         try { stopHook(); done.complete(()); () }
@@ -135,6 +146,6 @@ object Health {
         case None => respond(x, 404, "")
       })
     http.start()
-    new Server(http, readyToggle)
+    new Server(http, workers, readyToggle)
   }
 }

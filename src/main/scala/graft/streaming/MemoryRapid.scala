@@ -11,11 +11,17 @@ import graft.messages.{River, Routed}
 /** In-memory rapid — the TestRapid analogue (reference:
   * rapids-and-rivers-test/src/main/kotlin/.../TestRapid.kt:15-76; SURVEY §3.3).
   *
-  * `sendTestMessage` feeds a MemoryStream; each registered river flow runs as
-  * a Structured Streaming query whose replies are captured in an in-memory
-  * outbox inspected via [[MemoryRapid.Inspector]] — the same synchronous
-  * send-then-assert pattern as the reference (processAllAvailable drains the
-  * micro-batch like TestRapid's direct notifyMessage call).
+  * `sendTestMessage` feeds a MemoryStream. The registered rivers run as ONE
+  * streaming query whose foreachBatch routes every river off one persisted
+  * micro-batch ([[Fanout.routeBatchObserved]]) — the reference's read-once
+  * listener fanout (RapidsConnection.kt:44-55), and the routing
+  * [[KafkaRapid.run]] runs. Register every river before the first send;
+  * the query starts lazily on the first [[sendTestMessage]]. Only stateful
+  * rivers ([[registerStateful]]) keep a query of their own. Replies are
+  * captured in an in-memory outbox inspected via [[MemoryRapid.Inspector]]
+  * — the same synchronous send-then-assert pattern as the reference
+  * (processAllAvailable drains the micro-batch like TestRapid's direct
+  * notifyMessage call).
   */
 final class MemoryRapid(spark: SparkSession, name: String = "rapid",
     /** When true, every reply a river publishes is ALSO fed back onto the
@@ -26,23 +32,14 @@ final class MemoryRapid(spark: SparkSession, name: String = "rapid",
       */
     loopback: Boolean = false,
     /** Hard bound on loopback re-injection rounds per send. */
-    maxLoopbackHops: Int = 100,
-    /** Single-scan mode ([[Fanout]]): the whole rapid runs as ONE streaming
-      * query whose foreachBatch routes every registered river off one
-      * persisted micro-batch — the reference's read-once listener fanout
-      * (RapidsConnection.kt:44-55). Register all rivers BEFORE the first
-      * send; the query starts lazily on the first [[sendTestMessage]].
-      * Default (false) keeps one query per river — each river then has
-      * independent offsets, like separate Kafka consumer groups.
-      */
-    fanout: Boolean = false) {
+    maxLoopbackHops: Int = 100) {
   import spark.implicits._
 
-  // One MemoryStream PER RIVER (non-fanout mode): a MemoryStream serves a
-  // single query — the first query's offset commit trims the shared batch
-  // buffer, which would starve every other subscriber (each Kafka consumer
-  // group gets its own offsets; this is the in-memory equivalent). In
-  // fanout mode there is exactly ONE entry here, serving the one query.
+  // One MemoryStream PER QUERY (the fanout query and each stateful river's
+  // own): a MemoryStream serves a single query — the first query's offset
+  // commit trims the shared batch buffer, which would starve every other
+  // subscriber (each Kafka consumer group gets its own offsets; this is the
+  // in-memory equivalent).
   private val inputs = mutable.ArrayBuffer.empty[MemoryStream[(String, String)]]
   private val fanoutRegs = mutable.ArrayBuffer.empty[Fanout.Registration]
   private val outbox = mutable.ArrayBuffer.empty[(String, String)]
@@ -57,11 +54,12 @@ final class MemoryRapid(spark: SparkSession, name: String = "rapid",
 
   // Error stops the rapid (RapidIntegrationTest.kt:126-141): an unhandled
   // exception in ANY river flow shuts the whole application down — one dead
-  // subscriber must not leave the app half-alive and reporting healthy. Each
-  // river is its own streaming query here, so a listener propagates the
-  // first erroneous termination to every sibling query. Stopping is done off
-  // the listener bus thread (stop() joins the stream thread and would
-  // deadlock the bus).
+  // subscriber must not leave the app half-alive and reporting healthy. A
+  // failing stateless river fails the fanout query, but the fanout query
+  // and the stateful rivers' queries are siblings, so a listener propagates
+  // the first erroneous termination to every sibling query. Stopping is
+  // done off the listener bus thread (stop() joins the stream thread and
+  // would deadlock the bus).
   private val errorPropagation = new org.apache.spark.sql.streaming.StreamingQueryListener {
     import org.apache.spark.sql.streaming.StreamingQueryListener._
     override def onQueryStarted(e: QueryStartedEvent): Unit = ()
@@ -102,23 +100,14 @@ final class MemoryRapid(spark: SparkSession, name: String = "rapid",
       .map { derived => failure.compareAndSet(None, Some(derived)); failure.get().get }
   }
 
-  private def newInput(): MemoryStream[(String, String)] = {
+  /** A fresh subscription to the rapid: (key, value) like the Kafka source's
+    * projection; tombstones (null values) are dropped by River.attach.
+    */
+  private def newInput(): DataFrame = {
     val in = MemoryStream[(String, String)](
       implicitly[org.apache.spark.sql.Encoder[(String, String)]], spark)
     inputs += in
-    in
-  }
-
-  /** A fresh subscription to the rapid: (key, value) like the Kafka source's
-    * projection; tombstones (null values) are dropped by River.attach.
-    * Per-river-query mode only — a fanout rapid has exactly ONE stream (its
-    * own); an extra subscription would be an orphan no query drains.
-    */
-  def stream: DataFrame = {
-    require(!fanout,
-      "fanout rapid: rivers attach via register (the single query routes " +
-        "them); a separate subscription would never be consumed")
-    newInput().toDF().toDF("key", "value")
+    in.toDF().toDF("key", "value")
   }
 
   /** Attach a river and a reply flow. The flow maps the routed stream to a
@@ -126,43 +115,35 @@ final class MemoryRapid(spark: SparkSession, name: String = "rapid",
     * the rapid. Key-stickiness (KeyMessageContext.kt:7-10) is the flow's
     * default: carry the incoming key column through.
     *
-    * Per-river-query mode starts the river's own streaming query here;
-    * [[fanout]] mode only records the registration — the single shared
-    * query starts on the first send and routes all rivers per batch.
+    * Only records the registration: the rapid's single query starts on the
+    * first send and routes every river per batch, so the flow is a plan
+    * builder ([[Fanout.Registration]]).
     */
   def register(river: River)(flow: Routed => DataFrame): Unit =
-    if (fanout) {
-      // check-and-append under the SAME lock startFanout snapshots under: a
-      // registration racing the first send must either land in the snapshot
-      // or fail loudly — never silently miss the routing
-      fanoutRegs.synchronized {
-        require(!fanoutStarted.get(),
-          "fanout rapid: register every river before the first send " +
-            "(the single streaming query is already running)")
-        fanoutRegs += Fanout.Registration(river, flow,
-          s"$name-river-${riverSeq.getAndIncrement()}")
-        ()
-      }
-    } else registerOwnQuery(river)(flow)
+    // check-and-append under the SAME lock startFanout snapshots under: a
+    // registration racing the first send must either land in the snapshot
+    // or fail loudly — never silently miss the routing
+    fanoutRegs.synchronized {
+      require(!fanoutStarted.get(),
+        "rapid: register every river before the first send " +
+          "(the single streaming query is already running)")
+      fanoutRegs += Fanout.Registration(river, flow,
+        s"$name-river-${riverSeq.getAndIncrement()}")
+      ()
+    }
 
-  // one sequence across BOTH registration paths: fanout registration names
-  // and own-query names share the "<rapid>-river-N" format, so independent
-  // counters would hand the same metrics label to two different rivers
+  // registrations and stateful queries draw "<rapid>-river-N" names from
+  // one counter, so one metrics label never means two rivers
   private val riverSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** A river with its OWN streaming query. In fanout mode this is how
-    * STATEFUL rivers run (flatMapGroupsWithState / watermarked dedup):
-    * keyed state needs a continuous streaming query — inside the fanout's
-    * foreachBatch it would restart empty every trigger (Fanout guard). The
-    * stateful river pays its own source subscription; stateless rivers
-    * keep sharing the single scan.
+  /** A river with its OWN streaming query — how STATEFUL rivers run
+    * (flatMapGroupsWithState / watermarked dedup): keyed state needs a
+    * continuous streaming query — inside the fanout's foreachBatch it would
+    * restart empty every trigger (Fanout guard). The stateful river pays
+    * its own source subscription; stateless rivers share the single scan.
     */
-  def registerStateful(river: River)(flow: Routed => DataFrame): Unit =
-    registerOwnQuery(river)(flow)
-
-  private def registerOwnQuery(river: River)(flow: Routed => DataFrame): Unit = {
-    val routed = river.attach(newInput().toDF().toDF("key", "value"), col("value"))
-    val replies = flow(routed)
+  def registerStateful(river: River)(flow: Routed => DataFrame): Unit = {
+    val replies = flow(river.attach(newInput(), col("value")))
     val q = replies.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) => collectReplies(batch) }
@@ -185,7 +166,7 @@ final class MemoryRapid(spark: SparkSession, name: String = "rapid",
 
   private val fanoutStarted = new java.util.concurrent.atomic.AtomicBoolean(false)
   // per-river routing counters accumulated across fanout batches — the
-  // reference's per-listener message_counter kept alive in single-scan mode
+  // reference's per-listener message_counter
   private val fanoutCounters = mutable.Map.empty[String, Map[String, Long]]
   private val fanoutWall = new java.util.concurrent.atomic.AtomicLong(0L)
 
@@ -195,10 +176,10 @@ final class MemoryRapid(spark: SparkSession, name: String = "rapid",
     */
   def fanoutBusyNanos: Long = fanoutWall.get()
 
-  /** Accumulated per-river routing metrics in fanout mode (river query name
-    * -> messages/passed/precondition_failed/validation_failed/unparseable +
-    * declared tag counters). Empty in per-river-query mode, where each
-    * query's own observe/Timers surface carries this.
+  /** Accumulated per-river routing metrics of the fanout query (river
+    * name -> messages/passed/precondition_failed/validation_failed/
+    * unparseable + declared tag counters + est_busy_nanos). Stateful rivers
+    * report through their own query's progress instead.
     */
   def fanoutMetrics: Map[String, Map[String, Long]] =
     fanoutCounters.synchronized(fanoutCounters.toMap)
@@ -214,16 +195,16 @@ final class MemoryRapid(spark: SparkSession, name: String = "rapid",
       }
     }
 
-  /** Start the fanout query (idempotent; no-op unless [[fanout]]): ONE
-    * MemoryStream, ONE streaming query, every registered river routed off
-    * one persisted batch per trigger ([[Fanout.routeBatchObserved]]).
+  /** Start the fanout query (idempotent): ONE MemoryStream, ONE streaming
+    * query, every registered river routed off one persisted batch per
+    * trigger ([[Fanout.routeBatchObserved]]).
     *
     * The start-once guard is an AtomicBoolean, NOT the queries monitor:
     * `start()` delivers QueryStartedEvent to listeners synchronously, and a
     * listener reading [[queryIds]] (Lifecycle's ownership filter does)
     * would deadlock against a start() made while holding that monitor.
     */
-  def startFanout(): Unit = if (fanout) {
+  private def startFanout(): Unit = {
     // flag + snapshot share the fanoutRegs lock with register's
     // check-and-append (TOCTOU-free); the query starts OUTSIDE any lock —
     // start() delivers QueryStartedEvent synchronously to listeners that
@@ -235,7 +216,7 @@ final class MemoryRapid(spark: SparkSession, name: String = "rapid",
       else Vector.empty
     }
     if (regs.nonEmpty) {
-      val q = newInput().toDF().toDF("key", "value").writeStream
+      val q = newInput().writeStream
         .outputMode("append")
         .foreachBatch { (batch: DataFrame, _: Long) =>
           // unioned: all rivers' replies drain in ONE action per batch,
@@ -302,26 +283,22 @@ final class MemoryRapid(spark: SparkSession, name: String = "rapid",
     spark.streams.removeListener(errorPropagation)
   }
 
-  // a stopped fanout rapid whose lazy query never started has no inactive
+  // a stopped rapid whose lazy fanout query never started has no inactive
   // query to observe — the explicit flag keeps isRunning truthful
   @volatile private var rapidStopped = false
 
-  /** Liveness: every registered river query is active (KafkaRapid.isRunning
-    * analogue; surfaced by RapidApplication health). A fanout rapid whose
-    * single query has not started yet (it starts on the first send) counts
-    * as running once rivers are registered and nothing has failed.
+  /** Liveness: every started query is active (KafkaRapid.isRunning
+    * analogue; surfaced by RapidApplication health). The fanout query
+    * starts on the first send, so before it a rapid counts as running once
+    * a river is registered and nothing has failed.
     */
   def isRunning: Boolean = queries.synchronized {
-    if (rapidStopped) false
-    else if (fanout)
-      // registered = pending fanout rivers (query starts on first send) OR
-      // already-running queries (incl. stateful rivers' own queries)
+    !rapidStopped &&
       (fanoutRegs.synchronized(fanoutRegs.nonEmpty) || queries.nonEmpty) &&
-        failure.get().isEmpty && queries.forall(_.isActive)
-    else queries.nonEmpty && queries.forall(_.isActive)
+      failure.get().isEmpty && queries.forall(_.isActive)
   }
 
-  /** Ids of this rapid's river queries (lifecycle-event ownership filter). */
+  /** Ids of this rapid's queries (lifecycle-event ownership filter). */
   def queryIds: Set[java.util.UUID] = queries.synchronized(queries.map(_.id).toSet)
 
   /** TestRapid.inspektør (TestRapid.kt:38-75). */

@@ -61,20 +61,17 @@ object RapidApplication {
     }
 
   /** In-memory application for tests/local runs: rivers + ping/pong +
-    * lifecycle, the whole reference wiring minus the Kafka transport.
+    * lifecycle, the whole reference wiring minus the Kafka transport. The
+    * user rivers share ONE read-once streaming query, as on Kafka
+    * ([[MemoryRapid]]): register every river before the first send.
     */
   final class InMemory(
       spark: SparkSession,
       val appName: String,
       val instanceId: String,
-      clock: () => Long = () => System.currentTimeMillis(),
-      /** Single-scan mode ([[Fanout]]): the whole app runs as ONE streaming
-        * query — the reference's read-once listener fanout. Register every
-        * river before the first send.
-        */
-      fanout: Boolean = false) {
+      clock: () => Long = () => System.currentTimeMillis()) {
 
-    val rapid = new MemoryRapid(spark, appName, fanout = fanout)
+    val rapid = new MemoryRapid(spark, appName)
     private var lifecycleListener: Option[org.apache.spark.sql.streaming.StreamingQueryListener] = None
     // application_down publishes counted AT THE LIFECYCLE CALLBACK — stop()
     // waits on this O(1) counter, not an O(outbox) rescan per poll
@@ -103,10 +100,10 @@ object RapidApplication {
           rapid.publish(m)
         })
       // ping/pong is STATEFUL (per-instance rate-limit via
-      // flatMapGroupsWithState), so in fanout mode it keeps its own
-      // streaming query — keyed state cannot live inside the shared scan's
-      // foreachBatch (it would restart empty every trigger; Fanout rejects
-      // it loudly). User rivers still share the single scan.
+      // flatMapGroupsWithState), so it keeps its own streaming query —
+      // keyed state cannot live inside the shared scan's foreachBatch (it
+      // would restart empty every trigger; Fanout rejects it loudly). User
+      // rivers still share the single scan.
       val pingRiver = River()
         .precondition(Validation.requireValue("@event_name", "ping"))
         .validate(Validation.requireParsed("ping_time",
@@ -123,7 +120,7 @@ object RapidApplication {
     def send(message: String, key: String = null): Unit = rapid.sendTestMessage(message, key)
 
     /** Health surface (reference /isalive /isready, KtorApplication.kt:97-153,
-      * bound to rapid::isRunning / isReady): all river queries active.
+      * bound to rapid::isRunning / isReady): all the rapid's queries active.
       */
     def isRunning: Boolean = rapid.isRunning
     def isReady: Boolean = rapid.isRunning
@@ -147,19 +144,18 @@ object RapidApplication {
   }
 
   def createInMemory(spark: SparkSession, appName: String, instanceId: String,
-                     clock: () => Long = () => System.currentTimeMillis(),
-                     fanout: Boolean = false): InMemory =
-    new InMemory(spark, appName, instanceId, clock, fanout).start()
+                     clock: () => Long = () => System.currentTimeMillis()): InMemory =
+    new InMemory(spark, appName, instanceId, clock).start()
 
   /** The full production assembly — the reference's
     * `RapidApplication.create(env).start()` story (RapidApplication.kt:
     * 144-168) in one object: rapid + default ping/pong river + lifecycle
-    * events + per-river timers + the Ktor-analogue HTTP probe surface
+    * events + query timers + the Ktor-analogue HTTP probe surface
     * (/isalive /isready /metrics /stop with the bounded preStop drain).
     *
-    * MemoryRapid-backed — the transport this container can execute; a Kafka
-    * deployment keeps the identical surface and swaps the transport for
-    * [[KafkaRapid.run]] (single-scan fanout) driven by [[configFromEnv]].
+    * MemoryRapid-backed, with the same single-scan fanout as a Kafka
+    * deployment, which keeps the identical surface and swaps the transport
+    * for [[KafkaRapid.run]] driven by [[configFromEnv]].
     */
   final class Wired private[RapidApplication] (
       val app: InMemory,
@@ -168,11 +164,13 @@ object RapidApplication {
       port: Int,
       extraRoutes: Map[String, () => (Int, String)] = Map.empty) {
 
-    /** Probe metrics: the latest per-river batch timings as Prometheus
-      * gauges — the on_packet_seconds analogue surfaced exactly where the
-      * reference's Ktor /metrics exposes its micrometer registry — plus, in
-      * fanout mode, the accumulated per-river routing counters (the
-      * message_counter analogue, kept alive by the per-branch observations).
+    /** Probe metrics as Prometheus gauges, exposed exactly where the
+      * reference's Ktor /metrics exposes its micrometer registry: the
+      * latest batch timings of each of the rapid's queries (the fanout
+      * query and each stateful river's; the on_packet_seconds analogue),
+      * the accumulated per-river routing counters of the fanout (the
+      * message_counter analogue, from the per-branch observations), and
+      * each fanout river's estimated share of the batch wall.
       */
     private def metrics(): Map[String, Double] =
       timers.latest.toSeq.flatMap { case (q, t) =>
@@ -184,7 +182,7 @@ object RapidApplication {
           counts.map {
             // per-river share of the fused batch wall (Fanout.attributeCost)
             // — the closest defensible analogue of per-river
-            // on_packet_seconds that single-scan mode can offer
+            // on_packet_seconds that the single scan can offer
             case ("est_busy_nanos", v) =>
               s"""river_busy_seconds_estimate{river="$riverName"}""" -> v / 1e9
             case (metric, v) =>
@@ -237,12 +235,11 @@ object RapidApplication {
   def createWired(spark: SparkSession, appName: String, instanceId: String,
                   clock: () => Long = () => System.currentTimeMillis(),
                   port: Int = 0,
-                  fanout: Boolean = false,
                   /** Custom endpoints alongside the probes — the reference's
                     * withKtorModule analogue.
                     */
                   extraRoutes: Map[String, () => (Int, String)] = Map.empty): Wired = {
-    val app = new InMemory(spark, appName, instanceId, clock, fanout)
+    val app = new InMemory(spark, appName, instanceId, clock)
     // lambda, not eta-expansion: queryIds must be read at event time
     val timers = Timers.attach(spark, id => app.rapid.queryIds.contains(id))
     app.start()

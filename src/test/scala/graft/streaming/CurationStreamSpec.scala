@@ -70,10 +70,10 @@ class CurationStreamSpec extends AnyFunSuite {
     val log = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val answer = (b: DataFrame) => { log.add("answer"); b }
     val onBatch = (b: DataFrame) => { log.add(s"onBatch ${b.count()}"); () }
-    // runs the three triggers through `sink`; returns the call log and
-    // the number of Spark jobs the query ran
+    // runs the three triggers through `sink`; returns the call log, the
+    // number of Spark jobs the query ran and its summed input rows
     def run(sink: DataFrame => org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row])
-        : (Seq[String], Int) = {
+        : (Seq[String], Int, Long) = {
       log.clear()
       val q = sink(spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(dataDir))
@@ -85,11 +85,12 @@ class CurationStreamSpec extends AnyFunSuite {
       assert(q.recentProgress.length == 3 && q.recentProgress.head.numInputRows == 0,
         "three triggers, the first one empty")
       org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-      (log.toArray.toSeq.map(_.toString), jobs.getOrElse(q.id.toString, 0))
+      (log.toArray.toSeq.map(_.toString), jobs.getOrElse(q.id.toString, 0),
+        q.recentProgress.map(_.numInputRows).sum)
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val (logged, _) = run(CurationStream.serve(_, answer)(onBatch,
+      val (logged, _, servedRows) = run(CurationStream.serve(_, answer)(onBatch,
         (b => { log.add("rejects rows"); TextOps.bm25ServeRejects(b) },
           r => { log.add(s"rejects ${r.collect().map(_.getLong(0)).mkString(",")}"); () }),
         (b => { log.add("silent rows"); b.filter(col("query_id") < 0L) },
@@ -100,13 +101,16 @@ class CurationStreamSpec extends AnyFunSuite {
         logged.toString)
       // no side channel passed: exactly the jobs of a hand-written sink
       // that only skips empty batches and answers
-      val (plain, plainJobs) = run(CurationStream.serve(_, answer)(onBatch))
+      val (plain, plainJobs, plainRows) = run(CurationStream.serve(_, answer)(onBatch))
       assert(plain == Seq("answer", "onBatch 2", "answer", "onBatch 2"), plain.toString)
-      val (_, bareJobs) = run(_.writeStream.foreachBatch { (b: DataFrame, _: Long) =>
+      val (_, bareJobs, _) = run(_.writeStream.foreachBatch { (b: DataFrame, _: Long) =>
         if (!b.isEmpty) onBatch(answer(b))
         ()
       })
       assert(plainJobs > 0 && plainJobs == bareJobs, s"$plainJobs vs $bareJobs jobs")
+      // each trigger reads its request files once: 4 requests landed
+      assert(servedRows == 4L && plainRows == 4L,
+        s"numInputRows summed to $servedRows and $plainRows, not 4")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 

@@ -17,11 +17,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.messages.{River, Routed, Validation}
 
-/** Single-scan fanout mode (Fanout / MemoryRapid(fanout = true)): the
-  * reference reads each record once and notifies every listener
-  * (RapidsConnection.kt:44-55); the single-query mode must prove the same —
-  * N rivers, every message seen by each, exactly ONE streaming query whose
-  * input rows are counted once.
+/** Single-scan fanout (Fanout, and MemoryRapid, which runs every
+  * stateless river through it): the reference reads each record once and
+  * notifies every listener (RapidsConnection.kt:44-55); the single query
+  * must prove the same — N rivers, every message seen by each, exactly ONE
+  * streaming query whose input rows are counted once.
   */
 class FanoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
@@ -56,7 +56,7 @@ class FanoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("N rivers see every message off ONE query with one input scan") {
     val spark = TestSpark.spark
-    val rapid = new MemoryRapid(spark, "fanout", fanout = true)
+    val rapid = new MemoryRapid(spark, "fanout")
     // three rivers with different routes; each echoes a tagged reply
     Seq("a", "b", "c").foreach { ev =>
       rapid.register(eventRiver(ev)) { r =>
@@ -100,7 +100,7 @@ class FanoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("registering after the fanout query started fails loudly") {
-    val rapid = new MemoryRapid(TestSpark.spark, "fanout-late", fanout = true)
+    val rapid = new MemoryRapid(TestSpark.spark, "fanout-late")
     rapid.register(eventRiver("a")) { r => r.passed.select(col("key"), col("value")) }
     rapid.sendTestMessage("""{"@event_name":"a"}""")
     val ex = intercept[IllegalArgumentException] {
@@ -112,7 +112,7 @@ class FanoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("error in one river's flow stops the single query — and the rapid (RapidIntegrationTest.kt:126-141)") {
     val spark = TestSpark.spark
-    val rapid = new MemoryRapid(spark, "fanout-err", fanout = true)
+    val rapid = new MemoryRapid(spark, "fanout-err")
     rapid.register(eventRiver("fine")) { r =>
       r.passed.select(col("key"), col("value"))
     }
@@ -132,7 +132,7 @@ class FanoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("loopback multi-hop flows work off the single query") {
     val spark = TestSpark.spark
-    val rapid = new MemoryRapid(spark, "fanout-loop", fanout = true, loopback = true)
+    val rapid = new MemoryRapid(spark, "fanout-loop", loopback = true)
     // hop 1: a -> b; hop 2: b -> done
     rapid.register(eventRiver("a")) { r =>
       r.passed.select(col("key"), lit("""{"@event_name":"b"}""").as("value"))
@@ -149,7 +149,7 @@ class FanoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("a stateful flow on the shared scan fails LOUDLY, never silently resets state") {
     val spark = TestSpark.spark
-    val rapid = new MemoryRapid(spark, "fanout-stateful", fanout = true)
+    val rapid = new MemoryRapid(spark, "fanout-stateful")
     // flatMapGroupsWithState inside the fanout's per-batch routing would
     // run fine and silently forget its state every trigger — the guard
     // must down the rapid with actionable guidance instead
@@ -168,7 +168,7 @@ class FanoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(rapid.firstFailure.exists(_.contains("registerStateful")),
       s"expected the stateful-flow guidance, got ${rapid.firstFailure}")
     // the same river registered STATEFUL works: its own query owns the state
-    val rapid2 = new MemoryRapid(spark, "fanout-stateful2", fanout = true)
+    val rapid2 = new MemoryRapid(spark, "fanout-stateful2")
     rapid2.registerStateful(River()
       .precondition(Validation.requireValue("@event_name", "ping"))
       .validate(Validation.requireParsed("ping_time",
@@ -183,7 +183,7 @@ class FanoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("a stopped fanout rapid reports not running even if its lazy query never started") {
-    val rapid = new MemoryRapid(TestSpark.spark, "fanout-idle", fanout = true)
+    val rapid = new MemoryRapid(TestSpark.spark, "fanout-idle")
     rapid.register(eventRiver("a")) { r => r.passed.select(col("key"), col("value")) }
     assert(rapid.isRunning) // registered, nothing failed
     rapid.stop()            // stopped before any send: no query ever existed

@@ -99,6 +99,30 @@ class HealthSpec extends AnyFunSuite {
     } finally { hungForever.countDown(); srv.close() }
   }
 
+  test("probes answer while /stop drains: /isready is 503 within 1 s while the hook holds /stop") {
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val srv = Health.serve(
+      alive = () => true, ready = () => true,
+      stopHook = () => { entered.countDown(); release.await() })
+    try {
+      srv.markReady()
+      @volatile var stopCode = 0
+      val stopper = new Thread(() => stopCode = get(srv.port, "/stop")._1)
+      stopper.start()
+      assert(entered.await(10, java.util.concurrent.TimeUnit.SECONDS), "stop hook never ran")
+      // a probe that waited for the drain would time out here
+      val rsp = HttpClient.newHttpClient().send(
+        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${srv.port}/isready"))
+          .timeout(java.time.Duration.ofSeconds(1)).GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(rsp.statusCode() == 503, "readiness must read 503 while draining")
+      release.countDown()
+      stopper.join(10000)
+      assert(stopCode == 200, s"the drain finished, /stop got $stopCode")
+    } finally { release.countDown(); srv.close() }
+  }
+
   test("/stop surfaces a throwing hook as 500, never a hung exchange") {
     val srv = Health.serve(
       alive = () => true, ready = () => true,

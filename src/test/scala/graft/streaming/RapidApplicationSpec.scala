@@ -33,8 +33,7 @@ class RapidApplicationSpec extends AnyFunSuite {
   test("fanout app shell: stateless rivers share ONE scan, stateful ping/pong keeps its state across batches") {
     val base = 1700000000000L
     val app = RapidApplication.createInMemory(
-      TestSpark.spark, "fanout-app", "instance-f1", clock = () => base + 10000,
-      fanout = true)
+      TestSpark.spark, "fanout-app", "instance-f1", clock = () => base + 10000)
     try {
       // a stateless user river rides the shared fanout scan
       app.register(graft.messages.River()

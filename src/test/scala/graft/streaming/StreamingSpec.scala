@@ -43,8 +43,7 @@ class StreamingSpec extends AnyFunSuite {
     rapid.sendTestMessage("""{"@event_name":"ping"}""", "k1")
     val insp = rapid.inspector
     val bodies = (0 until insp.size).map(insp.message)
-    // a shared MemoryStream would let the first query's commit starve the
-    // second river — both rivers must reply
+    // both rivers route off the rapid's one scan — both must reply
     assert(bodies.exists(_.contains("by-ping-river")), s"got $bodies")
     assert(bodies.exists(_.contains("by-all-river")), s"got $bodies")
     rapid.stop()
@@ -108,10 +107,10 @@ class StreamingSpec extends AnyFunSuite {
     }
     rapid.sendTestMessage("""{"@event_name":"fine"}""")
     assert(rapid.isRunning)
-    // the poison payload kills the second river's query...
+    // the poison payload fails the rapid's query...
     intercept[Exception](rapid.sendTestMessage("""{"@event_name":"boom"}"""))
-    // ...and the failure must propagate: EVERY river query stops (one dead
-    // subscriber must not leave the app half-alive and reporting healthy)
+    // ...and EVERY river stops with it (one dead subscriber must not leave
+    // the app half-alive and reporting healthy)
     val deadline = System.currentTimeMillis() + 30000
     while (rapid.isRunning && System.currentTimeMillis() < deadline) Thread.sleep(100)
     assert(!rapid.isRunning, "healthy sibling river kept running after a river error")
@@ -155,7 +154,8 @@ class StreamingSpec extends AnyFunSuite {
     val base = 1700000000000L
     val clock = () => base + 10000L // fixed "now": 10s after base
     val rapid = new MemoryRapid(spark, "pp")
-    rapid.register(
+    // PingPong keeps per-instance state across batches: its own query
+    rapid.registerStateful(
       River()
         .precondition(Validation.requireValue("@event_name", "ping"))
         .validate(Validation.requireKey("ping_time"))) { routed =>

@@ -72,8 +72,7 @@ class WiredSpec extends AnyFunSuite {
   test("wired app in fanout mode surfaces per-river message counters on /metrics") {
     val base = 1700000000000L
     val wired = RapidApplication.createWired(
-      TestSpark.spark, "wired-fan", "wired-f1", clock = () => base + 1000,
-      fanout = true)
+      TestSpark.spark, "wired-fan", "wired-f1", clock = () => base + 1000)
     try {
       // a stateless user river on the shared scan (ping/pong, being
       // stateful, runs its own query and reports via Timers instead)
