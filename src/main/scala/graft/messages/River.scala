@@ -41,11 +41,29 @@ final case class River(
   def declaredKeys: Set[String] =
     (preconditions ++ validations).map(_.key).filter(_.nonEmpty).toSet
 
+  /** The sorted keys of the schema-pruned fast path, when this river takes
+    * it: every rule key-scoped (`onValue`) on flat keys. None = the
+    * whole-document variant path.
+    */
+  private[messages] def fastKeys: Option[Seq[String]] = {
+    val keys = declaredKeys.toSeq.sorted
+    val fast = keys.nonEmpty && (preconditions ++ validations).forall(_.onValue.isDefined) &&
+      keys.forall(k => !k.contains(".") && !k.contains("`") && k != River.CorruptCol)
+    if (fast) Some(keys) else None
+  }
+
   /** Attach to a DataFrame whose `jsonCol` holds raw JSON message strings.
     * Adds columns: `msg`, `status`, `problems`.
     *
     * status: unparseable | precondition_failed | validation_failed | passed.
     * Tombstones (null values) are dropped, KafkaRapid.kt:162-163.
+    *
+    * Two halves: the PARSE half turns the raw JSON into a parsed message
+    * expression, and the ROUTE half computes the rule flags, status and
+    * problems over it. Here the parse expressions go inline into the
+    * river's own projection; [[route]] runs the same route half over a
+    * parse that several rivers share ([[River.SharedParse]], the fanout's
+    * read-once form).
     *
     * Two compilation modes, one semantics (same truth tables, same Routed
     * surface):
@@ -59,62 +77,92 @@ final case class River(
     *    whole-document try_parse_json + per-key variant gets.
     */
   def attach(df: DataFrame, jsonCol: Column): Routed = {
-    val rules = preconditions ++ validations
-    val keys = declaredKeys.toSeq.sorted
-    val fast = keys.nonEmpty && rules.forall(_.onValue.isDefined) &&
-      keys.forall(k => !k.contains(".") && !k.contains("`") && k != River.CorruptCol)
-    if (fast) attachFast(df, jsonCol, keys) else attachVariant(df, jsonCol)
+    val raw = col(River.RawCol)
+    // Stage 0 — materialize the raw JSON once, fenced: the tombstone Filter
+    // would otherwise inline jsonCol (often a full to_json envelope build,
+    // ~10 us/row) and evaluate it a second time alongside the parse input.
+    val input = df
+      .withColumn(River.RawCol, graft.functions.OptimizerFence(jsonCol))
+      .filter(raw.isNotNull) // tombstone filter
+    fastKeys match {
+      case Some(keys) =>
+        routeFast(input, River.fromJson(raw, keys), try_parse_json(raw), Seq(River.RawCol))
+      case None =>
+        routeVariant(input, try_parse_json(raw), Seq(River.RawCol))
+    }
   }
 
-  private def attachFast(df: DataFrame, jsonCol: Column, keys: Seq[String]): Routed = {
+  /** The route half of [[attach]] over `parsed`, the output of `shared`
+    * (which must have been built over a river set holding this river):
+    * the same `Routed` as `attach` on the raw frame, read off the shared
+    * parse columns, which leave with the routed frame's internal columns.
+    *
+    * A fast-path river reads its keys out of the shared union-key parse.
+    * A row that parse accepted parses identically under any subset of its
+    * keys. A row it rejected is parsed again with this river's own pruned
+    * schema: another river's key can make the union parse reject a row
+    * this river's parse accepts (a nested duplicate key under that key,
+    * which variant conversion refuses), and the row keeps its own status.
+    * A river whose keys are the union's reads the union parse as is.
+    */
+  def route(parsed: DataFrame, shared: River.SharedParse): Routed = {
+    require(shared.rivers.contains(this), "route: the shared parse was built without this river")
+    val variant = col(River.VariantCol).getField(River.DocField)
+    val internal = Seq(River.JsonCol, River.VariantCol)
+    fastKeys match {
+      case Some(keys) =>
+        val union = col(River.JsonCol)
+        val own =
+          if (keys == shared.keys) union
+          else when(!River.rejected(union), struct(keys.map(k => union.getField(k).as(k)) :+
+              lit(null).cast("string").as(River.CorruptCol): _*))
+            .otherwise(River.fromJson(col(shared.raw), keys))
+        routeFast(parsed, own, variant, internal)
+      case None =>
+        routeVariant(parsed, variant, internal)
+    }
+  }
+
+  /** The fast-path route half over `parsed`, a from_json struct of this
+    * river's keys plus the corrupt-record field. `variant` parses the raw
+    * JSON whole; it is read only for unparseable rows.
+    */
+  private def routeFast(input: DataFrame, parsed: Column, variant: Column,
+      internal: Seq[String]): Routed = {
     val corrupt = River.CorruptCol
-    val ddl = (keys.map(k => s"`$k` variant") :+ s"`$corrupt` string")
-      .mkString("struct<", ", ", ">")
-    val schema = org.apache.spark.sql.types.DataType.fromDDL(ddl)
-    // Jackson's leniencies are explicitly OFF so both compilation modes
-    // accept the same strict-RFC JSON the variant parser does. Remaining
-    // documented divergence: duplicate object keys (Jackson is last-wins —
-    // matching the REFERENCE's Jackson behavior — while the variant parser
-    // rejects them as unparseable).
-    val parsed = from_json(col(River.RawCol), schema, Map(
-      "columnNameOfCorruptRecord" -> corrupt,
-      "mode" -> "PERMISSIVE",
-      "allowSingleQuotes" -> "false",
-      "allowNonNumericNumbers" -> "false"))
     // malformed JSON and non-object roots (scalars/arrays) land in the
     // corrupt-record field — the reference's "message must be a JSON
     // object" severe (JsonMessage.kt:97-105). A DATA key named like the
     // corrupt column cannot spoof it: JacksonParser only writes that field
     // on a parse failure (locked by the path-equivalence property test).
-    val bad = parsed.isNull || parsed.getField(corrupt).isNotNull
+    val bad = River.rejected(parsed)
     // the exposed msg struct carries ONLY the declared keys — the corrupt
     // field (which holds the full raw text of malformed payloads) must not
     // leak into downstream sinks via msg.* / to_json(msg)
-    stage(df, jsonCol, parsed.dropFields(corrupt), bad,
+    stage(input, parsed.dropFields(corrupt), bad,
       r => r.onValue.get(parsed.getField(r.key)), structMsg = true,
       // problem messages read the MATERIALIZED msg struct attribute (stage 2
       // runs after the fenced parse projection), not a re-parse
-      valueOf = r => col("msg").getField(r.key))
+      valueOf = r => col("msg").getField(r.key), variant, internal)
   }
 
-  private def attachVariant(df: DataFrame, jsonCol: Column): Routed = {
-    val msg = try_parse_json(col(River.RawCol))
+  /** The variant-path route half over `msg`, the whole parsed document. */
+  private def routeVariant(input: DataFrame, msg: Column, internal: Seq[String]): Routed = {
     // Reference: a message must be a JSON *object* (JsonMessage.kt:97-105);
     // scalars/arrays are severe.
     val isObject = schema_of_variant(msg).startsWith("OBJECT")
-    stage(df, jsonCol, msg, msg.isNull || !isObject, r => r(msg), structMsg = false,
-      valueOf = r => try_variant_get(col("msg"), JsonPaths.variantPath(r.key), "variant"))
+    stage(input, msg, msg.isNull || !isObject, r => r(msg), structMsg = false,
+      valueOf = r => try_variant_get(col("msg"), JsonPaths.variantPath(r.key), "variant"),
+      msg, internal)
   }
 
   /** Shared routing stages over a parsed message expression and a per-rule
-    * flag builder.
+    * flag builder; `internal` names the input's columns the routed frame
+    * drops.
     */
-  private def stage(df: DataFrame, jsonCol: Column, msg: Column, bad: Column,
-      flag: Rule => Column, structMsg: Boolean, valueOf: Rule => Column): Routed = {
-    // Stage 0 — materialize the raw JSON once, fenced: the tombstone Filter
-    // would otherwise inline jsonCol (often a full to_json envelope build,
-    // ~10 us/row) and evaluate it a second time alongside the parse input.
-    val raw = col(River.RawCol)
+  private def stage(input: DataFrame, msg: Column, bad: Column,
+      flag: Rule => Column, structMsg: Boolean, valueOf: Rule => Column,
+      variant: Column, internal: Seq[String]): Routed = {
     // Stage 1 — ONE projection holding the parse and every rule predicate
     // as a boolean flag, each wrapped in OptimizerFence. The fence (a
     // non-deterministic identity, zero runtime cost) serves two purposes
@@ -135,10 +183,7 @@ final case class River(
     }
     val flagCols =
       ("_bad" -> graft.functions.OptimizerFence(bad)) +: (preFlags ++ valFlags)
-    val flagged = df
-      .withColumn(River.RawCol, graft.functions.OptimizerFence(jsonCol))
-      .filter(raw.isNotNull) // tombstone filter
-      .withColumns(Map(("msg" -> msg) +: flagCols: _*))
+    val flagged = input.withColumns(Map(("msg" -> msg) +: flagCols: _*))
     // Stage 2 — status/problems as cheap boolean/literal combinations over
     // the flag ATTRIBUTES (no variant reads here). status keeps its own
     // fence: PushPredicateThroughNonJoin pushes any filter through a
@@ -162,9 +207,9 @@ final case class River(
             Validation.problemsFromFlags("error", validations, i => col(s"_v$i"), valueOf))
           // unparseable rows carry their severe parse problem (JsonMessage
           // .kt:97-105) — a dead letter must never render as "No errors"
-          .when(col("status") === "unparseable", Validation.unparseableProblems(raw))
+          .when(col("status") === "unparseable", Validation.unparseableProblems(variant))
           .otherwise(array().cast("array<struct<severity:string,message:string>>")))
-      .drop(flagCols.map(_._1) :+ River.RawCol: _*)
+      .drop(flagCols.map(_._1) ++ internal: _*)
     Routed(out, declaredKeys, structMsg, declaredValues)
   }
 
@@ -184,6 +229,66 @@ object River {
   /** Internal column names (dropped / not part of the routed surface). */
   private[messages] val RawCol = "_graft_raw"
   private[messages] val CorruptCol = "_graft_corrupt"
+  private[messages] val JsonCol = "_graft_json"
+  private[messages] val VariantCol = "_graft_variant"
+  private[messages] val DocField = "doc"
+
+  /** The fast path's parse: schema-pruned from_json of `raw` into a struct
+    * of `keys` (each a variant) plus the corrupt-record field.
+    */
+  private[messages] def fromJson(raw: Column, keys: Seq[String]): Column = {
+    val ddl = (keys.map(k => s"`$k` variant") :+ s"`$CorruptCol` string")
+      .mkString("struct<", ", ", ">")
+    // Jackson's leniencies are explicitly OFF so both compilation modes
+    // accept the same strict-RFC JSON the variant parser does. Remaining
+    // documented divergence: duplicate object keys (Jackson is last-wins —
+    // matching the REFERENCE's Jackson behavior — while the variant parser
+    // rejects them as unparseable).
+    from_json(raw, org.apache.spark.sql.types.DataType.fromDDL(ddl), Map(
+      "columnNameOfCorruptRecord" -> CorruptCol,
+      "mode" -> "PERMISSIVE",
+      "allowSingleQuotes" -> "false",
+      "allowNonNumericNumbers" -> "false"))
+  }
+
+  /** True where a [[fromJson]] parse rejected its row. */
+  private[messages] def rejected(parsed: Column): Column =
+    parsed.isNull || parsed.getField(CorruptCol).isNotNull
+
+  /** The parse half of [[River.attach]], shared by `rivers`: each message
+    * is parsed once for all of them, and [[River.route]] routes each river
+    * off the result. `raw` names the column holding the raw JSON.
+    *
+    * [[apply]] drops the tombstones and adds
+    *  - one from_json over the sorted union of every fast-path river's
+    *    declared keys (Jackson still skips every other field), when some
+    *    river takes the fast path;
+    *  - one whole-document try_parse_json when some river takes the variant
+    *    path. Otherwise the same parse runs only on the rows the union parse
+    *    rejected, for an unparseable row's problem text: every row a
+    *    river's own parse rejects, the union parse rejects too.
+    *
+    * Persisting that frame (as the fanout does per trigger) parses each
+    * message once for every river instead of once per river.
+    */
+  final case class SharedParse(rivers: Seq[River], raw: String) {
+    require(rivers.nonEmpty, "a shared parse needs at least one river")
+    private[messages] val keys: Seq[String] = rivers.flatMap(_.fastKeys).flatten.distinct.sorted
+    private val variant = rivers.exists(_.fastKeys.isEmpty)
+
+    def apply(df: DataFrame): DataFrame = {
+      val json = col(raw)
+      val input = df.filter(json.isNotNull) // tombstone filter
+      val parsed = if (keys.isEmpty) input else input.withColumn(JsonCol, fromJson(json, keys))
+      val doc = if (variant) try_parse_json(json)
+        else when(rejected(col(JsonCol)), try_parse_json(json))
+      // the document sits in a one-field struct: the in-memory columnar
+      // cache sizes a top-level variant column's first buffer at batch
+      // size x 2 KB (20 MB per cached partition at the default 10,000
+      // rows, allocated on every persist), a struct column's at 200 KB
+      parsed.withColumn(VariantCol, struct(doc.as(DocField)))
+    }
+  }
 }
 
 /** The 4-way routed result. Mirrors the listener fanout onSevere /

@@ -501,15 +501,15 @@ object Validation {
     }: _*)
   }
 
-  /** The severe problem carried by an unparseable message, from the raw
-    * payload (path-independent, so both river compilation modes agree):
-    * non-object JSON gets the reference's exact string
-    * (JsonMessage.kt:103); malformed text gets the Jackson-failure message
-    * minus the parser's own detail text, which Spark's parse does not
-    * surface (JsonMessage.kt:101 appends `err.message`).
+  /** The severe problem carried by an unparseable message, from `parsed`,
+    * the raw payload's whole-document try_parse_json (path-independent, so
+    * both river compilation modes agree): non-object JSON gets the
+    * reference's exact string (JsonMessage.kt:103); malformed text gets the
+    * Jackson-failure message minus the parser's own detail text, which
+    * Spark's parse does not surface (JsonMessage.kt:101 appends
+    * `err.message`).
     */
-  def unparseableProblems(raw: Column): Column = {
-    val parsed = try_parse_json(raw)
+  def unparseableProblems(parsed: Column): Column = {
     val msg = when(parsed.isNotNull && !schema_of_variant(parsed).startsWith("OBJECT"),
       lit("Incomplete json. Should be able to cast as ObjectNode."))
       .otherwise(lit("Invalid JSON per Jackson library"))

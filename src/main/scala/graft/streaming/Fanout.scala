@@ -23,26 +23,29 @@ import graft.messages.{River, Routed}
   *
   * This is the single-scan form, and the only way a stateless river runs:
   * ONE streaming query per rapid, on Kafka ([[KafkaRapid.run]]) and in
-  * memory ([[MemoryRapid]]) alike. Its foreachBatch persists the
-  * micro-batch, routes every registered river's 4-way split off the
-  * in-memory rows, hands each river's replies to the sink, then
-  * unpersists — so the source is scanned once per micro-batch no matter
-  * how many rivers are registered (SURVEY §4 item 2). Each river re-parses
-  * its own schema-pruned projection off the cached rows: CPU over
-  * memory-resident rows, not another source scan, and each river keeps its
-  * own fast-path parse exactly as [[River.attach]] gives it on a stream of
-  * its own.
+  * memory ([[MemoryRapid]]) alike. Its foreachBatch parses the micro-batch
+  * ONCE for every registered river ([[River.SharedParse]]: the raw JSON
+  * with tombstones dropped, one from_json over the union of the fast-path
+  * rivers' declared keys, one try_parse_json when some river takes the
+  * variant path), persists that parse, routes every river's 4-way split
+  * off it ([[River.route]]), hands each river's replies to the sink, then
+  * unpersists — so the source is scanned, and each message parsed, once
+  * per micro-batch no matter how many rivers are registered (SURVEY §4
+  * item 2). A river re-parses a message with its own schema only where the
+  * union parse rejected it, so every river keeps exactly the statuses
+  * [[River.attach]] gives it on a stream of its own.
   *
-  * The river plans are built and analyzed ONCE per query, not per trigger.
-  * The first trigger for a (registration list, batch schema, session)
-  * compiles the unioned reply plan over placeholder leaves ([[Slot]]) into
-  * an analyzed template; every trigger then binds its persisted batch into
-  * each slot and hands the sink a frame over the bound plan, which Spark
-  * only optimizes and plans. Otherwise a foreachBatch body pays the build
-  * and analysis of about ten Dataset constructions per river on every
-  * trigger — the cost that set the rapid's reply latency. Structured Streaming queries
-  * analyze their plan once the same way; a foreachBatch body is outside
-  * that machinery, so the fanout does it itself.
+  * The plans are built and analyzed ONCE per query, not per trigger. The
+  * first trigger for a (registration list, batch schema, session) compiles
+  * the shared parse and the unioned reply plan over placeholder leaves
+  * ([[Slot]]) into an analyzed template; every trigger then binds its batch
+  * into the parse, persists it, binds the persisted parse into each slot of
+  * the reply plan and hands the sink a frame over the bound plan, which
+  * Spark only optimizes and plans. Otherwise a foreachBatch body pays the
+  * build and analysis of about ten Dataset constructions per river on every
+  * trigger — the cost that set the rapid's reply latency. Structured
+  * Streaming queries analyze their plan once the same way; a foreachBatch
+  * body is outside that machinery, so the fanout does it itself.
   *
   * Error semantics come free: any river's flow throwing inside foreachBatch
   * fails THE query, which is the reference's one-dead-listener-stops-the-app
@@ -78,9 +81,9 @@ object Fanout {
       name: String = "river")
 
   /** Route one micro-batch (columns: key, value, plus any source metadata)
-    * through every registration off a single persisted scan, handing the
+    * through every registration off a single persisted parse, handing the
     * sink ONE unioned (key, value) reply frame: a single Spark job shares
-    * the persisted batch across every river's plan, and — on Kafka — ONE
+    * the persisted parse across every river's plan, and — on Kafka — ONE
     * producer write per trigger instead of R sequential writes. The persist
     * is scoped to the batch: released before the micro-batch commits, so
     * state never accumulates across triggers. Any river's branch failing
@@ -114,18 +117,19 @@ object Fanout {
     if (regs.isEmpty) Nil
     else {
       val template = compiled(batch, regs, observe)
-      batch.persist()
+      val parsed = template.parse(batch)
+      parsed.persist()
       try {
         val observations = template.metrics.map(_ => new Observation())
-        sink(template.bind(batch, observations))
+        sink(template.bind(parsed, observations))
         // safe to block: the sink's action completed, so every branch's
         // observation is resolved
         regs.map(_.name).zip(observations.map(_.get))
-      } finally { batch.unpersist(); () }
+      } finally { parsed.unpersist(); () }
     }
 
-  /** The placeholder a template's river plans are built over: a leaf with
-    * the batch's schema that [[Template.bind]] replaces. The analyzer gives
+  /** The placeholder a template's plans are built over: a leaf with the
+    * schema of the frame [[Template]] binds in its place. The analyzer gives
     * every union branch after the first its own copy (relation dedup,
     * through `newInstance`), so binding replaces every Slot, not one
     * instance.
@@ -135,46 +139,57 @@ object Fanout {
     override def newInstance(): LogicalPlan = copy(output = output.map(_.newInstance()))
   }
 
-  /** The analyzed unioned reply plan of one (registration list, batch
-    * schema, session), over [[Slot]] leaves. `metrics` holds, per
-    * registration, the name and dataframe id of its observe node (empty
-    * when not observed). Holds no batch, and only a weak reference to the
-    * session.
+  /** `plan` with every slot replaced by `source` under a projection keeping
+    * the slot's attribute ids. Up, not down: a slot's replacement holds
+    * the source plan, which has no slot to visit.
+    */
+  private def fill(plan: LogicalPlan, source: LogicalPlan): LogicalPlan =
+    plan.transformUp {
+      case Slot(output) =>
+        Project(output.zip(source.output).map { case (slot, in) =>
+          Alias(in, slot.name)(exprId = slot.exprId)
+        }, source)
+    }
+
+  /** The analyzed plans of one (registration list, batch schema, session):
+    * `parsePlan`, the rivers' shared parse ([[River.SharedParse]]) over a
+    * batch [[Slot]], and `plan`, the unioned reply plan over [[Slot]]s of
+    * that parse's output. `metrics` holds, per registration, the name and
+    * dataframe id of its observe node (empty when not observed). Holds no
+    * batch, and only a weak reference to the session.
     */
   private final class Template(val session: WeakReference[SparkSession],
-      val schema: StructType, val observe: Boolean, plan: LogicalPlan,
-      val metrics: Seq[(String, Long)]) {
+      val schema: StructType, val observe: Boolean, parsePlan: LogicalPlan,
+      plan: LogicalPlan, val metrics: Seq[(String, Long)]) {
 
-    /** The reply frame of one batch: every slot becomes the batch's
-      * analyzed plan under a projection keeping the slot's attribute ids,
-      * each observe node takes its observation's name, registered fresh
-      * for this action, and every random expression of the template gets
-      * a new seed (they were seeded once, when the template was built).
-      * The result is resolved by construction, so it is not analyzed
-      * again.
+    /** The shared parse of one batch, to persist for the trigger. */
+    def parse(batch: DataFrame): DataFrame =
+      Bridge.ofAnalyzed(batch.sparkSession,
+        fill(parsePlan, batch.queryExecution.analyzed))
+
+    /** The reply frame of one trigger over its persisted `parsed` batch:
+      * every slot becomes the parse's analyzed plan, each observe node
+      * takes its observation's name, registered fresh for this action, and
+      * every random expression of the template gets a new seed (they were
+      * seeded once, when the template was built). The result is resolved
+      * by construction, so it is not analyzed again.
       */
-    def bind(batch: DataFrame, observations: Seq[Observation]): DataFrame = {
-      val source = batch.queryExecution.analyzed
+    def bind(parsed: DataFrame, observations: Seq[Observation]): DataFrame = {
       val names = metrics.map(_._1).zip(observations.map(_.name)).toMap
-      // reseeded before the batch goes in: the batch plan must stay as
+      // reseeded before the parse goes in: the parse plan must stay as
       // persisted to be read from the cache
       val seeded = plan.transformAllExpressionsWithPruning(
           _.containsPattern(EXPRESSION_WITH_RANDOM_SEED)) {
         case e: ExpressionWithRandomSeed => e.withNewSeed(seeds.nextLong())
       }
-      // up, not down: a slot's replacement holds the batch plan, which has
-      // no slot to visit
-      val bound = seeded.transformUp {
-        case Slot(output) =>
-          Project(output.zip(source.output).map { case (slot, in) =>
-            Alias(in, slot.name)(exprId = slot.exprId)
-          }, source)
+      val named = seeded.transformUp {
         case c: CollectMetrics if names.contains(c.name) => c.copy(name = names(c.name))
       }
+      val bound = fill(named, parsed.queryExecution.analyzed)
       metrics.zip(observations).foreach { case ((_, id), o) =>
-        Bridge.registerObservation(batch.sparkSession, o, id)
+        Bridge.registerObservation(parsed.sparkSession, o, id)
       }
-      Bridge.ofAnalyzed(batch.sparkSession, bound)
+      Bridge.ofAnalyzed(parsed.sparkSession, bound)
     }
   }
 
@@ -201,11 +216,14 @@ object Fanout {
 
   private def compile(session: SparkSession, schema: StructType, regs: Seq[Registration],
       observe: Boolean): Template = {
-    val slot = Bridge.ofAnalyzed(session, Slot(DataTypeUtils.toAttributes(schema)))
+    def slot(schema: StructType) = Bridge.ofAnalyzed(session, Slot(DataTypeUtils.toAttributes(schema)))
+    val shared = River.SharedParse(regs.map(_.river), "value")
+    val parse = shared(slot(schema))
+    val parsed = slot(parse.schema)
     val tag = java.util.UUID.randomUUID()
     val names = regs.indices.map(i => s"fanout-$tag-$i")
     val replies = regs.zip(names).map { case (r, metric) =>
-      val routed = r.river.attach(slot, col("value"))
+      val routed = r.river.route(parsed, shared)
       // the flow reads THROUGH the observe node so the union's single
       // action executes it; metrics describe the routed stream, and the
       // flow's own filters (e.g. .passed) sit above the observation
@@ -221,7 +239,8 @@ object Fanout {
           "(its routing metrics observe that input)")
       metric -> ids(metric)
     }
-    new Template(new WeakReference(session), schema, observe, plan, metrics)
+    new Template(new WeakReference(session), schema, observe, parse.queryExecution.analyzed,
+      plan, metrics)
   }
 
   /** Approximate per-river cost attribution for the fused fanout action.

@@ -117,6 +117,63 @@ class ValidationPropertySpec extends AnyFunSuite {
     }
   }
 
+  test("each river routed off a shared parse equals its own attach, on both paths") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    // rivers with different key sets: rA and rL are subsets of the union
+    // (their rows fall back to their own parse where the union parse
+    // rejects), rU declares the whole union, rV and rD take the variant path
+    import Validation._
+    val rA = River().validate(requireKey("a"), requireValue("k", "a"))
+    val rX = River().precondition(requireKey("a")).validate(interestedIn("x"))
+    val rL = River().validate(requireKey("@løsning"), forbid("k"))
+    val rU = River().validate(interestedIn("a"), interestedIn("k"), interestedIn("x"),
+      requireKey("@løsning"))
+    val rV = River().validate(requireKey("k"), predicate("t", _ => lit(true)))
+    val rD = River().validate(requireKey("@løsning.Inntekt"), requireKey("a"))
+    val fastOnly = Seq(rA, rX, rL, rU)
+    assert(fastOnly.forall(_.fastKeys.isDefined) && Seq(rV, rD).forall(_.fastKeys.isEmpty))
+
+    val genObj: Gen[Option[String]] = Gen.oneOf(genVal.map(_.map(_.render)),
+      Gen.chooseNum(0, 9).map(n => Some(s"""{"Inntekt":{"beløp":$n}}""")),
+      Gen.const(Some("""{"k":1}""")))
+    val genMsg: Gen[String] = for {
+      a <- genVal; k <- genVal; x <- genObj; l <- genObj
+    } yield Seq("a" -> a.map(_.render), "k" -> k.map(_.render), "x" -> x, "@løsning" -> l)
+      .collect { case (key, Some(v)) => s""""$key":$v""" }.mkString("{", ",", "}")
+    val duplicate = """{"a":1,"x":{"k":1,"k":2}}""" // only rX and rU declare x
+    val adversarial = Seq(duplicate,
+      """{"a":1,"k":"a","_graft_corrupt":"spoof"}""",
+      "[1]", "3", "\"s\"", "null", """{"a":1,"k":""", """{'a':1}""",
+      """{"@løsning":{"Inntekt":{"beløp":1}},"a":1}""", null)
+    (1 to 2).foreach { round =>
+      val generated = Gen.listOfN(40, genMsg)(Gen.Parameters.default, Seed(31L * round))
+        .getOrElse(fail("generator produced no sample"))
+      val df = (generated ++ adversarial).zipWithIndex.toDF("value", "idx").repartition(3)
+      def rows(r: Routed) = r.all
+        .select(col("idx"), col("status"), to_json(col("problems")), to_json(col("msg")))
+        .orderBy(col("idx")).collect()
+        .map(x => (x.getInt(0), x.getString(1), x.getString(2), x.getString(3))).toSeq
+      Seq(fastOnly, fastOnly ++ Seq(rV, rD)).foreach { rivers =>
+        val shared = River.SharedParse(rivers, "value")
+        val parsed = shared(df).persist()
+        try rivers.zipWithIndex.foreach { case (river, i) =>
+          val own = river.attach(df, col("value"))
+          val routed = river.route(parsed, shared)
+          val tag = s"round $round, river $i of ${rivers.size}"
+          assert(routed.all.columns.toSeq == own.all.columns.toSeq, tag)
+          assert(routed.structMsg == own.structMsg, tag)
+          assert(rows(routed) == rows(own), tag)
+        } finally { parsed.unpersist(); () }
+      }
+      // the duplicate row is one the union parse rejects and rA's own
+      // parse accepts: the fallback is what keeps rA's status
+      val dup = generated.size
+      def statusAt(r: River) = rows(r.attach(df, col("value"))).find(_._1 == dup).get._2
+      assert(statusAt(rX) == "unparseable" && statusAt(rA) != "unparseable")
+    }
+  }
+
   test("nested requireArrayElements agrees with direct evaluation and across paths") {
     val spark = TestSpark.spark
     import spark.implicits._

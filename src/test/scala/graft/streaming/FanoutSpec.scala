@@ -3,15 +3,19 @@ package graft.streaming
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Encoder}
-import org.apache.spark.sql.execution.UnionExec
+import org.apache.spark.sql.catalyst.expressions.{CaseWhen, Expression, JsonToStructs}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{StructType, VariantType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -256,6 +260,75 @@ class FanoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(triggers(3).partitions != triggers.head.partitions,
         s"expected a different partition count, got ${triggers.map(_.partitions)}")
       assert(builds.map(_.get) == rivers.map(_ => 1), "each flow must be built once per query")
+    } finally q.stop()
+  }
+
+  test("a trigger parses each message once: the persisted parse holds the only parses") {
+    // river 0's keys are a subset of the union (its rows fall back to its
+    // own parse where the union parse rejects), river 1 declares the whole
+    // union, river 2 takes the variant path
+    val rivers = Seq(
+      eventRiver("a"),
+      River().precondition(Validation.requireValue("@event_name", "b"))
+        .validate(Validation.interestedIn("x")),
+      eventRiver("b").validate(Validation.requireKey("@løsning.x")))
+    val seen = mutable.ArrayBuffer.empty[Seq[String]]
+    val (regs, _) = counted(rivers) { i => r =>
+      seen.synchronized { seen += r.all.select("*").columns.toSeq }
+      r.passed.select(col("key"), concat(lit(s"r$i:"), col("value")).as("value"))
+    }
+    def isParseJson(e: Expression) = e match {
+      case s: StaticInvoke => s.functionName == "parseJson"
+      case _ => false
+    }
+    def count(plan: SparkPlan)(p: Expression => Boolean): Int =
+      collect(plan)(n => n.expressions.map(_.collect { case e if p(e) => e }.size).sum).sum
+    var checked = false
+    val (input, q) = fanoutQuery("fanout-parse-once") { b =>
+      Fanout.routeBatchUnioned(b, regs) { replies =>
+        assert(replies.columns.toSeq == Seq("key", "value"))
+        val plan = replies.queryExecution.executedPlan
+        val builders = collect(plan) { case s: InMemoryTableScanExec => s.relation.cacheBuilder }
+        assert(builders.size == rivers.size && builders.distinct.size == 1,
+          s"every branch must read the one persisted parse:\n$plan")
+        val parse = builders.head.cachedPlan
+        // a top-level variant column makes the columnar cache allocate a
+        // 20 MB buffer per partition on every trigger
+        assert(!parse.output.exists(_.dataType == VariantType), s"persisted parse:\n$parse")
+        val fromJson = collect(parse)(_.expressions.flatMap(_.collect { case j: JsonToStructs => j }))
+          .flatten
+        assert(fromJson.size == 1 && fromJson.head.schema.asInstanceOf[StructType].fieldNames
+          .toSeq == Seq("@event_name", "x", "_graft_corrupt"), s"union parse:\n$parse")
+        assert(count(parse)(isParseJson) == 1, s"shared variant parse:\n$parse")
+        // the branches: no whole-document parse, and a from_json only as the
+        // corrupt-row fallback of river 0
+        assert(count(plan)(isParseJson) == 0, s"a branch parses:\n$plan")
+        val fallbacks = count(plan) {
+          case CaseWhen(_, Some(_: JsonToStructs)) => true
+          case _ => false
+        }
+        assert(fallbacks > 0 && count(plan)(_.isInstanceOf[JsonToStructs]) == fallbacks,
+          s"a branch parses outside the corrupt-row fallback:\n$plan")
+        val got = pairs(replies)
+        val batch = b.sparkSession.createDataFrame(b.collect().toSeq.asJava, b.schema)
+        val want = pairs(rivers.indices.map { j =>
+          rivers(j).attach(batch, col("value")).passed
+            .select(col("key"), concat(lit(s"r$j:"), col("value")).as("value"))
+        }.reduce(_.unionAll(_)))
+        assert(got == want)
+        checked = true
+      }
+    }
+    try {
+      // the nested duplicate key fails the union parse (variant conversion
+      // refuses it) but not river 0's own parse, which skips x
+      val dup = """{"@event_name":"a","x":{"k":1,"k":2}}"""
+      input.addData(Seq("k1" -> dup, "k2" -> """{"@event_name":"b","x":1}""",
+        "k3" -> """{"@event_name":"b","@løsning":{"x":1}}""", "k4" -> "{oops"))
+      q.processAllAvailable()
+      assert(checked)
+      assert(seen.nonEmpty && seen.forall(_.forall(c => !c.startsWith("_graft_"))),
+        s"an internal column reached a flow: $seen")
     } finally q.stop()
   }
 
