@@ -1,13 +1,20 @@
 package graft.streaming
 
-import java.lang.ref.WeakReference
+import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.{NarrowDependency, Partition, SparkContext, TaskContext}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, ExpressionWithRandomSeed}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
 import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, LeafNode, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.trees.TreePattern.EXPRESSION_WITH_RANDOM_SEED
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.{CollectMetricsExec, LogicalRDD, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.StructType
@@ -35,17 +42,24 @@ import graft.messages.{River, Routed}
   * union parse rejected it, so every river keeps exactly the statuses
   * [[River.attach]] gives it on a stream of its own.
   *
-  * The plans are built and analyzed ONCE per query, not per trigger. The
-  * first trigger for a (registration list, batch schema, session) compiles
-  * the shared parse and the unioned reply plan over placeholder leaves
-  * ([[Slot]]) into an analyzed template; every trigger then binds its batch
-  * into the parse, persists it, binds the persisted parse into each slot of
-  * the reply plan and hands the sink a frame over the bound plan, which
-  * Spark only optimizes and plans. Otherwise a foreachBatch body pays the
-  * build and analysis of about ten Dataset constructions per river on every
-  * trigger — the cost that set the rapid's reply latency. Structured
-  * Streaming queries analyze their plan once the same way; a foreachBatch
-  * body is outside that machinery, so the fanout does it itself.
+  * The plans are built ONCE per query, not per trigger. The first trigger
+  * for a (registration list, batch schema, session) builds the shared parse
+  * and the unioned reply plan over placeholder leaves ([[Slot]]) into an
+  * analyzed template, then optimizes, plans and code-generates the reply
+  * plan once into an RDD DAG whose leaf reads whatever input the trigger
+  * binds to it ([[Leaf]]; one DAG per input partition count). Every trigger
+  * then binds its batch into the parse, persists it, binds the persisted
+  * parse's RDD to the leaf and hands the sink a frame over the DAG, so the
+  * trigger's only driver work is planning that one leaf, and it runs one
+  * job. Otherwise a foreachBatch body pays the build, analysis,
+  * optimization, planning and code generation of every river's plan on
+  * every trigger — the fixed cost that sets the rapid's reply latency.
+  * Structured Streaming queries analyze their plan once the same way; a
+  * foreachBatch body is outside that machinery, so the fanout does it
+  * itself. Per-trigger values stay runtime inputs ([[TriggerInputs]]), and
+  * a reply plan with a shuffle, a broadcast or a subquery is planned per
+  * trigger instead: a reused shuffle would serve an earlier trigger's map
+  * output.
   *
   * Error semantics come free: any river's flow throwing inside foreachBatch
   * fails THE query, which is the reference's one-dead-listener-stops-the-app
@@ -53,7 +67,7 @@ import graft.messages.{River, Routed}
   * propagation machinery.
   *
   * Metric granularity trade-off: per-river ROUTING COUNTS survive (each
-  * branch carries an Observation, [[routeBatchObserved]]), but batch TIMING
+  * branch carries an observe node, [[routeBatchObserved]]), but batch TIMING
   * is whole-rapid — the rivers execute as one fused action, so
   * [[Timers]]-style on_packet_seconds covers the batch, not one river. The
   * per-river figure is `est_busy_nanos`, each river's apportioned share of
@@ -65,24 +79,31 @@ object Fanout {
     * metrics (the reference's per-listener counter tags).
     *
     * `flow` is a plan builder: it runs once per query (per batch schema),
-    * over a placeholder of the micro-batch, and its plan then serves every
-    * trigger. So a flow must build its reply from its routed input alone:
-    * an action inside a flow (collect, count, an `Observation` of its own)
-    * is unsupported, and values a flow computes in Scala when it runs are
-    * fixed for the query's life — per-trigger values belong in expressions
-    * such as `current_timestamp()`, which each trigger evaluates anew.
-    * Every random expression (`uuid()`, `rand()`, `randn()`, `shuffle()`,
-    * ...) draws a fresh seed on every trigger, explicit seeds included, as
-    * Structured Streaming reseeds them for every micro-batch: a trigger
-    * never repeats the previous one's `@id`s. Analysis-time confs are
-    * fixed at query start, as for any streaming query definition.
+    * over a placeholder of the micro-batch, and its plan — analyzed,
+    * optimized and compiled once — then serves every trigger. So a flow
+    * must build its reply from its routed input alone: an action inside a
+    * flow (collect, count, an `Observation` of its own) is unsupported, and
+    * values a flow computes in Scala when it runs are fixed for the query's
+    * life. Per-trigger values belong in expressions, which the compiled
+    * plan reads as runtime inputs of each trigger ([[TriggerInputs]]):
+    * `current_timestamp()`, `now()`, `current_date()`, `localtimestamp()`
+    * and `current_time()` give the trigger's time, and every random
+    * expression (`uuid()`, `rand()`, `randn()`, `shuffle()`, ...) draws from
+    * the trigger's seed, explicit seeds included, as Structured Streaming
+    * reseeds them for every micro-batch: a trigger never repeats the
+    * previous one's `@id`s. A flow whose plan needs a shuffle (an
+    * aggregation, a join, `distinct`) or holds a subquery is planned anew on
+    * every trigger, so a trigger never reads another's map output; only the
+    * analysis is shared. SQL confs are fixed at query start, as for any
+    * streaming query definition.
     */
   final case class Registration(river: River, flow: Routed => DataFrame,
       name: String = "river")
 
   /** Route one micro-batch (columns: key, value, plus any source metadata)
     * through every registration off a single persisted parse, handing the
-    * sink ONE unioned (key, value) reply frame: a single Spark job shares
+    * sink ONE unioned (key, value) reply frame, valid during the sink call
+    * (it reads the trigger's persisted parse): a single Spark job shares
     * the persisted parse across every river's plan, and — on Kafka — ONE
     * producer write per trigger instead of R sequential writes. The persist
     * is scoped to the batch: released before the micro-batch commits, so
@@ -101,8 +122,9 @@ object Fanout {
     * per-listener message_counter survives the single-scan mode: each
     * river's branch carries an `observe` node (a row-pass-through over its
     * routed split), so the ONE unioned action fires every river's counters
-    * with zero extra Spark jobs. Each trigger attaches fresh observations
-    * to the same compiled plan. Returns (registration name -> this batch's
+    * with zero extra Spark jobs. The counters are the accumulators of the
+    * compiled plan's observe nodes, reset before each trigger's job, so a
+    * trigger reads its own counts. Returns (registration name -> this batch's
     * metric row: messages / passed / precondition_failed /
     * validation_failed / unparseable + the river's declared tag counters);
     * empty when there were no registrations (no action ran, and the sink
@@ -116,17 +138,31 @@ object Fanout {
       sink: DataFrame => Unit): Seq[(String, Map[String, Any])] =
     if (regs.isEmpty) Nil
     else {
-      val template = compiled(batch, regs, observe)
-      val parsed = template.parse(batch)
+      val t = template(batch, regs, observe)
+      val parsed = t.parse(batch)
       parsed.persist()
-      try {
-        val observations = template.metrics.map(_ => new Observation())
-        sink(template.bind(parsed, observations))
-        // safe to block: the sink's action completed, so every branch's
-        // observation is resolved
-        regs.map(_.name).zip(observations.map(_.get))
-      } finally { parsed.unpersist(); () }
+      try regs.map(_.name).zip(t.run(parsed, sink))
+      finally { parsed.unpersist(); () }
     }
+
+  /** The physical plan a trigger's reply frame runs: the reply plan, with
+    * the persisted parse's plan in place of every leaf that reads it. Valid
+    * inside the sink call only.
+    */
+  private[streaming] def executedPlan(replies: DataFrame): SparkPlan = {
+    val dag = replies.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }
+    val r = dag.flatMap(d => Option(running.get(d))).getOrElse(throw new IllegalArgumentException(
+      "not the reply frame of a fanout trigger in its sink call"))
+    r.reply.transformUp { case s: RDDScanExec if s.rdd.isInstanceOf[Leaf] => r.parse }
+  }
+
+  /** The plans of a trigger in flight: its reply plan and the plan of the
+    * persisted parse bound into it.
+    */
+  private final case class Running(reply: SparkPlan, parse: SparkPlan)
+
+  /** The triggers in flight, by the DAG their sink's frame reads. */
+  private val running = new ConcurrentHashMap[RDD[InternalRow], Running]()
 
   /** The placeholder a template's plans are built over: a leaf with the
     * schema of the frame [[Template]] binds in its place. The analyzer gives
@@ -151,62 +187,150 @@ object Fanout {
         }, source)
     }
 
+  private final case class LeafPartition(index: Int) extends Partition
+
+  /** The leaf of a compiled reply DAG, in place of every [[Slot]]: partition
+    * i reads partition i of whatever input the trigger binds. It declares
+    * no dependencies, so the input's lineage must hold no shuffle
+    * ([[Template.run]] checks). The
+    * binding is part of the RDD, so a job's tasks carry the input it was
+    * submitted with.
+    */
+  private final class Leaf(sc: SparkContext, partitions: Int) extends RDD[InternalRow](sc, Nil) {
+    @volatile private var input: RDD[InternalRow] = _
+    @volatile private var inputPartitions: Array[Partition] = _
+
+    def bind(rdd: RDD[InternalRow]): Unit = {
+      inputPartitions = rdd.partitions
+      require(inputPartitions.length == partitions,
+        s"a reply DAG of $partitions partitions bound to ${inputPartitions.length}")
+      input = rdd
+    }
+
+    def unbind(): Unit = { input = null; inputPartitions = null }
+
+    override protected def getPartitions: Array[Partition] =
+      Array.tabulate[Partition](partitions)(LeafPartition(_))
+
+    override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] = {
+      val in = input
+      if (in == null) throw new IllegalStateException(
+        "a fanout reply frame ran outside its trigger: the frame is valid during the sink call only")
+      in.iterator(inputPartitions(split.index), context)
+    }
+  }
+
+  /** One compiled reply DAG: `dag` is the template's plan, planned and
+    * code-generated once over `leaf`, for one input partition count.
+    * Whoever binds the leaf holds this object's lock until the job ran.
+    */
+  private final class Compiled(val leaf: Leaf, val plan: SparkPlan, val dag: RDD[InternalRow]) {
+    val metrics: Seq[CollectMetricsExec] = plan.collect { case c: CollectMetricsExec => c }
+  }
+
   /** The analyzed plans of one (registration list, batch schema, session):
     * `parsePlan`, the rivers' shared parse ([[River.SharedParse]]) over a
     * batch [[Slot]], and `plan`, the unioned reply plan over [[Slot]]s of
-    * that parse's output. `metrics` holds, per registration, the name and
-    * dataframe id of its observe node (empty when not observed). Holds no
-    * batch, and only a weak reference to the session.
+    * that parse's output, its random and current-time expressions reading
+    * the trigger ([[TriggerInputs]]). `metrics` holds, per registration,
+    * the name of its observe node (empty when not observed). Holds no
+    * batch between triggers.
     */
-  private final class Template(val session: WeakReference[SparkSession],
-      val schema: StructType, val observe: Boolean, parsePlan: LogicalPlan,
-      plan: LogicalPlan, val metrics: Seq[(String, Long)]) {
+  private final class Template(val session: SparkSession, val schema: StructType,
+      val observe: Boolean, parsePlan: LogicalPlan, plan: LogicalPlan, metrics: Seq[String]) {
 
     /** The shared parse of one batch, to persist for the trigger. */
     def parse(batch: DataFrame): DataFrame =
       Bridge.ofAnalyzed(batch.sparkSession,
         fill(parsePlan, batch.queryExecution.analyzed))
 
-    /** The reply frame of one trigger over its persisted `parsed` batch:
-      * every slot becomes the parse's analyzed plan, each observe node
-      * takes its observation's name, registered fresh for this action, and
-      * every random expression of the template gets a new seed (they were
-      * seeded once, when the template was built). The result is resolved
-      * by construction, so it is not analyzed again.
+    /** Compiled DAGs by input partition count, until the plan proves to
+      * need planning per trigger.
       */
-    def bind(parsed: DataFrame, observations: Seq[Observation]): DataFrame = {
-      val names = metrics.map(_._1).zip(observations.map(_.name)).toMap
-      // reseeded before the parse goes in: the parse plan must stay as
-      // persisted to be read from the cache
-      val seeded = plan.transformAllExpressionsWithPruning(
-          _.containsPattern(EXPRESSION_WITH_RANDOM_SEED)) {
-        case e: ExpressionWithRandomSeed => e.withNewSeed(seeds.nextLong())
+    private val dags = mutable.Map.empty[Int, Compiled]
+    private var perTrigger = false
+
+    private def compiled(partitions: Int): Option[Compiled] = synchronized {
+      if (perTrigger) None
+      else dags.get(partitions).orElse {
+        val c = compile(partitions)
+        c match {
+          case Some(d) => dags(partitions) = d
+          case None => perTrigger = true
+        }
+        c
       }
-      val named = seeded.transformUp {
-        case c: CollectMetrics if names.contains(c.name) => c.copy(name = names(c.name))
+    }
+
+    /** `plan` over a [[Leaf]], planned and code-generated, unless it holds
+      * an exchange, a subquery or adaptive execution: a reused shuffle
+      * would serve an earlier trigger's map output.
+      */
+    private def compile(partitions: Int): Option[Compiled] = {
+      val leaf = new Leaf(session.sparkContext, partitions)
+      val qe = Bridge.ofAnalyzed(session, plan.transformUp {
+        case Slot(output) => Bridge.rddPlan(session, output, leaf)
+      }).queryExecution
+      val executed = qe.executedPlan
+      val shuffles = executed.exists {
+        case _: Exchange | _: AdaptiveSparkPlanExec => true
+        case p => p.subqueries.nonEmpty
       }
-      val bound = fill(named, parsed.queryExecution.analyzed)
-      metrics.zip(observations).foreach { case ((_, id), o) =>
-        Bridge.registerObservation(parsed.sparkSession, o, id)
+      if (shuffles) None else Some(new Compiled(leaf, executed, qe.toRdd))
+    }
+
+    /** Hand the sink the replies of one trigger over its persisted `parsed`
+      * batch, and return each registration's routing metrics (empty maps
+      * when not observed). A compiled DAG runs with the parse bound to its
+      * leaf; a plan with a shuffle, or a parse whose lineage holds one, is
+      * bound and planned anew.
+      */
+    def run(parsed: DataFrame, sink: DataFrame => Unit): Seq[Map[String, Any]] = {
+      val input = parsed.queryExecution
+      // a leaf declares no dependencies, so the scheduler would never run a
+      // shuffle in the input's lineage (a batch repartitioned upstream)
+      def narrow(rdd: RDD[_]): Boolean = rdd.dependencies.forall {
+        case d: NarrowDependency[_] => narrow(d.rdd)
+        case _ => false
       }
-      Bridge.ofAnalyzed(parsed.sparkSession, bound)
+      TriggerInputs.around(session.sparkContext) {
+        (if (narrow(input.toRdd)) compiled(input.toRdd.getNumPartitions) else None) match {
+          case Some(c) => c.synchronized {
+            c.leaf.bind(input.toRdd)
+            try {
+              c.metrics.foreach(_.resetMetrics())
+              replies(c.plan, c.dag, input.executedPlan, sink)
+            } finally c.leaf.unbind()
+          }
+          case None =>
+            val qe = Bridge.ofAnalyzed(session, fill(plan, input.analyzed)).queryExecution
+            replies(qe.executedPlan, qe.toRdd, input.executedPlan, sink)
+        }
+      }
+    }
+
+    private def replies(reply: SparkPlan, dag: RDD[InternalRow], parse: SparkPlan,
+        sink: DataFrame => Unit): Seq[Map[String, Any]] = {
+      running.put(dag, Running(reply, parse))
+      try sink(Bridge.ofAnalyzed(session, Bridge.rddPlan(session, reply.output, dag)))
+      finally running.remove(dag)
+      lazy val rows = CollectMetricsExec.collect(reply)
+      metrics.map { name => val r = rows(name); r.getValuesMap[Any](r.schema.fieldNames.toSeq) }
     }
   }
 
   /** Templates per registration list. Weak keys: a stopped query's
-    * registrations leave with it, and each template holds its session
-    * weakly, so neither stays reachable through this cache.
+    * registrations leave with it, and their templates, compiled DAGs and
+    * sessions with them.
     */
   private val templates = new java.util.WeakHashMap[Seq[Registration], List[Template]]()
 
-  private val seeds = new java.util.Random()
-
-  private def compiled(batch: DataFrame, regs: Seq[Registration], observe: Boolean): Template = {
+  private def template(batch: DataFrame, regs: Seq[Registration], observe: Boolean): Template = {
     val session = batch.sparkSession
     val schema = batch.schema
     def live = templates.synchronized(Option(templates.get(regs)).getOrElse(Nil))
-      .filter(_.session.get != null)
-    live.find(t => (t.session.get eq session) && t.schema == schema && t.observe == observe)
+      .filter(!_.session.sparkContext.isStopped)
+    live.find(t => (t.session eq session) && t.schema == schema && t.observe == observe)
       .getOrElse {
         val t = compile(session, schema, regs, observe)
         templates.synchronized { templates.put(regs, t :: live); () }
@@ -231,16 +355,15 @@ object Fanout {
       rejectStateful(r.flow(in), r.name)
         .select(col("key").cast("string").as("key"), col("value").cast("string").as("value"))
     }
-    val plan = replies.reduce(_.unionAll(_)).queryExecution.analyzed
-    val ids = plan.collect { case c: CollectMetrics => c.name -> c.dataframeId }.toMap
+    val plan = TriggerInputs.rewrite(replies.reduce(_.unionAll(_)).queryExecution.analyzed)
+    val observed = plan.collect { case c: CollectMetrics => c.name }.toSet
     val metrics = if (!observe) Nil else regs.zip(names).map { case (r, metric) =>
-      require(ids.contains(metric),
+      require(observed.contains(metric),
         s"fanout river '${r.name}' must build its replies from its routed input " +
           "(its routing metrics observe that input)")
-      metric -> ids(metric)
+      metric
     }
-    new Template(new WeakReference(session), schema, observe, parse.queryExecution.analyzed,
-      plan, metrics)
+    new Template(session, schema, observe, parse.queryExecution.analyzed, plan, metrics)
   }
 
   /** Approximate per-river cost attribution for the fused fanout action.

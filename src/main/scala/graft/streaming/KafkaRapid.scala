@@ -154,11 +154,13 @@ final class KafkaRapid(spark: SparkSession, config: KafkaRapidConfig) {
     * (RapidIntegrationTest.kt:126-141).
     *
     * Each flow is a plan builder and runs once per query: the first trigger
-    * builds and analyzes every river plan, and later triggers bind their
-    * batch into that plan ([[Fanout.Registration]]), with fresh seeds for
-    * its random expressions such as the `uuid()` of reply `@id`s. Actions
-    * inside a flow are unsupported, and analysis-time confs are fixed at
-    * query start, as for any streaming query definition.
+    * builds, analyzes, plans and code-generates every river plan, and later
+    * triggers bind their persisted parse into it and run one job
+    * ([[Fanout.Registration]]). The trigger's seed and time are runtime
+    * inputs of that plan, so reply `@id` uuids and `@opprettet` stamps are
+    * fresh on every trigger; a river plan with a shuffle is planned per
+    * trigger. Actions inside a flow are unsupported, and SQL confs are fixed
+    * at query start, as for any streaming query definition.
     */
   def run(regs: Seq[Fanout.Registration]): org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream

@@ -1,10 +1,13 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Column <-> Expression bridge. Spark 4 split Column off from Catalyst
   * (sql-api vs classic); the converters live in the sql-private
@@ -58,14 +61,11 @@ object Bridge {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
   }
 
-  /** Register `observation` for the CollectMetrics node named like it under
-    * `dataframeId`: the session completes it when an action over a plan
-    * holding that node succeeds. What `Dataset.observe(observation, ...)`
-    * does, for a node already in a plan (the ObservationManager is
-    * sql-private).
+  /** A resolved leaf over `rdd`, a relation of rows laid out as `output`:
+    * what `Dataset.checkpoint` builds, for a classic session.
+    * graft.streaming.Fanout puts one in place of each placeholder of its
+    * compiled reply plan, and hands its sink a frame over one.
     */
-  def registerObservation(spark: SparkSession, observation: Observation,
-      dataframeId: Long): Unit =
-    spark.asInstanceOf[classic.SparkSession].observationManager
-      .register(observation, dataframeId)
+  def rddPlan(spark: SparkSession, output: Seq[Attribute], rdd: RDD[InternalRow]): LogicalPlan =
+    LogicalRDD(output, rdd)(spark.asInstanceOf[classic.SparkSession])
 }

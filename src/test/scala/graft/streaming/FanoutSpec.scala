@@ -5,12 +5,16 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Encoder}
 import org.apache.spark.sql.catalyst.expressions.{CaseWhen, Expression, JsonToStructs}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Union}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -218,7 +222,7 @@ class FanoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       var branches, cachedBranches = -1
       Fanout.routeBatchUnioned(b, regs) { replies =>
         got = pairs(replies)
-        val unions = collect(replies.queryExecution.executedPlan) { case u: UnionExec => u }
+        val unions = collect(Fanout.executedPlan(replies)) { case u: UnionExec => u }
         branches = unions.map(_.children.size).sum
         cachedBranches = unions.flatMap(_.children)
           .count(c => collect(c) { case s: InMemoryTableScanExec => s }.nonEmpty)
@@ -287,7 +291,7 @@ class FanoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val (input, q) = fanoutQuery("fanout-parse-once") { b =>
       Fanout.routeBatchUnioned(b, regs) { replies =>
         assert(replies.columns.toSeq == Seq("key", "value"))
-        val plan = replies.queryExecution.executedPlan
+        val plan = Fanout.executedPlan(replies)
         val builders = collect(plan) { case s: InMemoryTableScanExec => s.relation.cacheBuilder }
         assert(builders.size == rivers.size && builders.distinct.size == 1,
           s"every branch must read the one persisted parse:\n$plan")
@@ -370,6 +374,186 @@ class FanoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         s"the second trigger repeated the first one's @id: $replies")
       assert(first.rand != second.rand && first.seeded != second.seeded,
         s"the second trigger repeated the first one's random seeds: $replies")
+    } finally q.stop()
+  }
+
+  test("a compiled trigger runs no codegen compile and no optimizer pass over its reply plan") {
+    val spark = TestSpark.spark
+    // Republish's defaults: @id from uuid(), @opprettet from
+    // current_timestamp(); a second river makes the reply plan a union, which
+    // is what the optimizer probe looks for
+    val (regs, _) = counted(Seq(eventRiver("a"), eventRiver("a"))) {
+      case 0 => r => Republish(r.passed.select(col("key"), col("value")), Nil, "svc", "inst")
+      case _ => r => r.passed.select(col("key"), col("value"))
+    }
+    val unionPasses = new AtomicInteger()
+    object ReplyPlanProbe extends Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = {
+        if (plan.exists(_.isInstanceOf[Union])) unionPasses.incrementAndGet()
+        plan
+      }
+    }
+    final case class Trigger(compiles: Long, optimizerPasses: Int, id: String, at: String)
+    val triggers = mutable.ArrayBuffer.empty[Trigger]
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper
+    // the query's session is cloned at start, with the probe in it
+    spark.experimental.extraOptimizations ++= Seq(ReplyPlanProbe)
+    val (input, q) = try fanoutQuery("fanout-compiled-once") { b =>
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val passes0 = unionPasses.get
+      var reply: com.fasterxml.jackson.databind.JsonNode = null
+      Fanout.routeBatchUnioned(b, regs) { out =>
+        reply = pairs(out).map(p => mapper.readTree(p._2)).find(_.has("@id")).get
+      }
+      triggers.synchronized {
+        triggers += Trigger(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0,
+          unionPasses.get - passes0, reply.path("@id").asText(), reply.path("@opprettet").asText())
+      }
+    } finally {
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations.filterNot(_ eq ReplyPlanProbe)
+    }
+    try {
+      (1 to 4).foreach { i =>
+        input.addData(Seq(s"k$i" -> """{"@event_name":"a"}"""))
+        q.processAllAvailable()
+      }
+      assert(triggers.size == 4, s"got $triggers")
+      assert(triggers.head.optimizerPasses > 0, s"the probe saw no reply plan: $triggers")
+      triggers.tail.foreach { t =>
+        assert(t.compiles == 0, s"a later trigger compiled generated code: $triggers")
+        assert(t.optimizerPasses == 0, s"a later trigger optimized the reply plan: $triggers")
+      }
+      assert(triggers.map(_.id).distinct.size == 4 && triggers.forall(_.id.nonEmpty),
+        s"a trigger repeated an @id: $triggers")
+      assert(triggers.map(_.at).distinct.size == 4, s"a trigger repeated an @opprettet: $triggers")
+    } finally q.stop()
+  }
+
+  test("a compiled trigger reads current_date() and localtimestamp() off its own instant") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    val fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
+    val (regs, _) = counted(Seq(eventRiver("a"))) { _ => r => r.passed.select(col("key"),
+      concat_ws("|", date_format(current_timestamp(), fmt), date_format(localtimestamp(), fmt),
+        date_format(current_date(), "yyyy-MM-dd")).as("value"))
+    }
+    def trigger(): (java.time.LocalDateTime, Seq[String]) = {
+      var out = Seq.empty[(String, String)]
+      val before = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)
+      Fanout.routeBatchUnioned(Seq("k" -> """{"@event_name":"a"}""").toDF("key", "value"), regs) {
+        r => out = pairs(r)
+      }
+      (before, out.head._2.split('|').toSeq)
+    }
+    val seen = (1 to 2).map { _ => Thread.sleep(5); trigger() }
+    seen.foreach { case (before, Seq(now, local, date)) =>
+      val at = java.time.LocalDateTime.parse(now.replace(' ', 'T'))
+      assert(local == now && date == now.take(10), s"one trigger, one instant: $seen")
+      assert(!at.isBefore(before.withNano(before.getNano / 1000 * 1000)) &&
+        java.time.Duration.between(before, at).toMillis < 60000, s"not the trigger's time: $seen")
+    }
+    assert(seen(0)._2.head != seen(1)._2.head, s"the second trigger reused the first's time: $seen")
+  }
+
+  test("a flow with a per-batch shuffle is planned per trigger and sees only its own batch") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val (regs, builds) = counted(Seq(River().validate(Validation.requireKey("@event_name")))) {
+      _ => r => r.passed.groupBy("key").count()
+        .select(col("key"), col("count").cast("string").as("value"))
+    }
+    val sends = Seq(Seq("a", "a", "b"), Seq("c"), Seq("a", "c", "c", "c"))
+    val got = sends.map { keys =>
+      var out = Seq.empty[(String, String)]
+      var shuffles = 0
+      val metrics = Fanout.routeBatchObserved(
+          keys.map(_ -> """{"@event_name":"e"}""").toDF("key", "value"), regs) { replies =>
+        shuffles = collect(Fanout.executedPlan(replies)) { case e: Exchange => e }.size
+        out = pairs(replies)
+      }
+      assert(shuffles > 0, "the shuffle left the plan the trigger ran")
+      assert(metrics.head._2("messages") == keys.size.toLong, s"got $metrics")
+      out
+    }
+    assert(got == sends.map(_.groupBy(identity).map { case (k, v) => k -> v.size.toString }
+      .toSeq.sorted))
+    assert(builds.head.get == 1, "each flow must be built once per query")
+  }
+
+  test("a batch repartitioned upstream is routed in full: its shuffle is not hidden behind a leaf") {
+    // without adaptive execution the upstream shuffle is still to run when
+    // the trigger's job starts, so the scheduler must see it
+    val spark = TestSpark.spark.newSession()
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    import spark.implicits._
+    val (regs, _) = counted(Seq(eventRiver("a"))) { _ => r => r.passed.select(col("key"), col("value")) }
+    val msgs = (1 to 6).map(i => s"k$i" -> """{"@event_name":"a"}""")
+    Seq(1, 3).foreach { partitions =>
+      var got = Seq.empty[(String, String)]
+      Fanout.routeBatchUnioned(msgs.toDF("key", "value").repartition(partitions), regs) { r =>
+        got = pairs(r)
+      }
+      assert(got == msgs.sorted, s"$partitions partitions: got $got")
+    }
+  }
+
+  test("two fanout routes sharing one registration list and one session get their own replies") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    // streaming queries run on sessions of their own; two callers on ONE
+    // session share one compiled DAG, whose leaf each binds in turn
+    val (regs, _) = counted(Seq(River().validate(Validation.requireKey("@event_name")))) {
+      _ => r => r.passed.select(col("key"), concat(lit("echo:"), col("value")).as("value"))
+    }
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val threads = Seq("x", "y").map { name =>
+      val t = new Thread(() => {
+        start.await()
+        (1 to 4).foreach { i =>
+          val sent = (1 to 3).map(j => s"$name$i-$j" -> s"""{"@event_name":"$name$i$j"}""")
+          var got = Seq.empty[(String, String)]
+          Fanout.routeBatchUnioned(sent.toDF("key", "value"), regs) { replies =>
+            // a slow sink: the other caller's trigger arrives mid-sink
+            Thread.sleep(50)
+            got = pairs(replies)
+          }
+          val want = sent.map { case (k, v) => k -> s"echo:$v" }.sorted
+          if (got != want) failures.add(s"$name trigger $i got $got, want $want")
+        }
+      })
+      t.setUncaughtExceptionHandler((_, e) => failures.add(s"$name: $e"))
+      t.start()
+      t
+    }
+    start.countDown()
+    threads.foreach(_.join(120000))
+    assert(threads.forall(!_.isAlive), "a caller did not finish")
+    assert(failures.isEmpty, failures.asScala.mkString("\n"))
+  }
+
+  test("routeBatchObserved counts each trigger on its own, never a running total") {
+    val (regs, _) = counted(Seq(eventRiver("a"))) { _ => r =>
+      r.passed.select(col("key"), col("value"))
+    }
+    val metrics = mutable.ArrayBuffer.empty[Map[String, Any]]
+    val (input, q) = fanoutQuery("fanout-observed") { b =>
+      val m = Fanout.routeBatchObserved(b, regs)(_.collect())
+      metrics.synchronized { metrics += m.head._2 }
+    }
+    try {
+      val sends = Seq(Seq("a", "b", "a"), Seq("b"), Seq("a", "a", "b", "a", "b"))
+      sends.zipWithIndex.foreach { case (events, i) =>
+        input.addData(events.zipWithIndex.map { case (e, j) => s"k$i-$j" -> s"""{"@event_name":"$e"}""" })
+        q.processAllAvailable()
+      }
+      assert(metrics.size == sends.size, s"got $metrics")
+      metrics.zip(sends).foreach { case (m, events) =>
+        assert(m("messages") == events.size.toLong && m("passed") == events.count(_ == "a").toLong &&
+          m("precondition_failed") == events.count(_ == "b").toLong, s"got $metrics")
+      }
     } finally q.stop()
   }
 
