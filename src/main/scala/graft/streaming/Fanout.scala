@@ -4,7 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.collection.mutable
 
-import org.apache.spark.{NarrowDependency, Partition, SparkContext, TaskContext}
+import org.apache.spark.{NarrowDependency, OneToOneDependency, Partition, SparkContext, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -12,7 +12,8 @@ import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
 import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, LeafNode, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.execution.{CollectMetricsExec, LogicalRDD, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{CollectMetricsExec, LogicalRDD, QueryExecution, RDDScanExec,
+  SparkPlan, SQLExecutionRDD, UnionExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
@@ -51,9 +52,15 @@ import graft.messages.{River, Routed}
   * then binds its batch into the parse, persists it, binds the persisted
   * parse's RDD to the leaf and hands the sink a frame over the DAG, so the
   * trigger's only driver work is planning that one leaf, and it runs one
-  * job. Otherwise a foreachBatch body pays the build, analysis,
-  * optimization, planning and code generation of every river's plan on
-  * every trigger — the fixed cost that sets the rapid's reply latency.
+  * job of one task per input partition: each task runs every river's
+  * branch over its partition in turn ([[Fused]]), as the reference hands
+  * each record to every listener in one loop, so the rapid's Kafka sink
+  * writes from one producer task per input partition. A branch that reads
+  * several input partitions per partition of its own (a `coalesce`) keeps
+  * a task per branch partition for the whole union. Otherwise a
+  * foreachBatch body pays the build, analysis, optimization, planning and
+  * code generation of every river's plan on every trigger — the fixed
+  * cost that sets the rapid's reply latency.
   * Structured Streaming queries analyze their plan once the same way; a
   * foreachBatch body is outside that machinery, so the fanout does it
   * itself. Per-trigger values stay runtime inputs ([[TriggerInputs]]), and
@@ -80,7 +87,9 @@ object Fanout {
     *
     * `flow` is a plan builder: it runs once per query (per batch schema),
     * over a placeholder of the micro-batch, and its plan — analyzed,
-    * optimized and compiled once — then serves every trigger. So a flow
+    * optimized and compiled once — then serves every trigger, in one job
+    * of one task per input partition that runs every river's flow over
+    * that partition (unless a flow reads across partitions). So a flow
     * must build its reply from its routed input alone: an action inside a
     * flow (collect, count, an `Observation` of its own) is unsupported, and
     * values a flow computes in Scala when it runs are fixed for the query's
@@ -105,7 +114,9 @@ object Fanout {
     * sink ONE unioned (key, value) reply frame, valid during the sink call
     * (it reads the trigger's persisted parse): a single Spark job shares
     * the persisted parse across every river's plan, and — on Kafka — ONE
-    * producer write per trigger instead of R sequential writes. The persist
+    * producer write per trigger instead of R sequential writes. The frame
+    * promises no row order; a compiled trigger's replies come partition by
+    * partition, each partition's in registration order. The persist
     * is scoped to the batch: released before the micro-batch commits, so
     * state never accumulates across triggers. Any river's branch failing
     * fails the one action, downing the query. No-op when no rivers are
@@ -194,7 +205,9 @@ object Fanout {
     * no dependencies, so the input's lineage must hold no shuffle
     * ([[Template.run]] checks). The
     * binding is part of the RDD, so a job's tasks carry the input it was
-    * submitted with.
+    * submitted with. When every branch of the reply union reaches the leaf
+    * one-to-one, one task per input partition reads partition i once for
+    * each branch ([[Fused]]).
     */
   private final class Leaf(sc: SparkContext, partitions: Int) extends RDD[InternalRow](sc, Nil) {
     @volatile private var input: RDD[InternalRow] = _
@@ -218,6 +231,27 @@ object Fanout {
         "a fanout reply frame ran outside its trigger: the frame is valid during the sink call only")
       in.iterator(inputPartitions(split.index), context)
     }
+  }
+
+  private final case class FusedPartition(index: Int, branches: Seq[Partition]) extends Partition
+
+  /** The branches of a reply union in one task per input partition:
+    * partition i iterates partition i of the first branch, then of the
+    * second, and so on, lazily. Sound only when every branch reaches the
+    * [[Leaf]] through one-to-one dependencies alone, so that branch k's
+    * partition i reads input partition i ([[Template]] checks);
+    * `UnionRDD` runs each branch's partitions as tasks of their own.
+    */
+  private final class Fused(sc: SparkContext, branches: Seq[RDD[InternalRow]])
+      extends RDD[InternalRow](sc, branches.map(new OneToOneDependency(_))) {
+
+    override protected def getPartitions: Array[Partition] =
+      Array.tabulate[Partition](branches.head.getNumPartitions)(i =>
+        FusedPartition(i, branches.map(_.partitions(i))))
+
+    override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] =
+      branches.iterator.zip(split.asInstanceOf[FusedPartition].branches.iterator)
+        .flatMap { case (branch, p) => branch.iterator(p, context) }
   }
 
   /** One compiled reply DAG: `dag` is the template's plan, planned and
@@ -276,7 +310,29 @@ object Fanout {
         case _: Exchange | _: AdaptiveSparkPlanExec => true
         case p => p.subqueries.nonEmpty
       }
-      if (shuffles) None else Some(new Compiled(leaf, executed, qe.toRdd))
+      if (shuffles) None else Some(new Compiled(leaf, executed, dag(qe, leaf)))
+    }
+
+    /** The RDD of `qe`'s executed plan: one task per input partition when
+      * the plan is a union whose every branch reads the leaf one-to-one
+      * ([[Fused]]), `qe.toRdd` otherwise (a branch over a `CoalescedRDD`,
+      * say, reads several input partitions per task). Wrapped as `toRdd`
+      * wraps it, so the tasks run under the session's SQL confs.
+      */
+    private def dag(qe: QueryExecution, leaf: Leaf): RDD[InternalRow] = {
+      def oneToOne(rdd: RDD[_]): Boolean = (rdd eq leaf) || rdd.dependencies.nonEmpty &&
+        rdd.dependencies.forall {
+          case d: OneToOneDependency[_] => oneToOne(d.rdd)
+          case _ => false
+        }
+      qe.executedPlan match {
+        case u: UnionExec =>
+          val branches = u.children.map(_.execute())
+          if (branches.forall(oneToOne)) new SQLExecutionRDD(
+            new Fused(session.sparkContext, branches), qe.sparkSession.sessionState.conf)
+          else qe.toRdd
+        case _ => qe.toRdd
+      }
     }
 
     /** Hand the sink the replies of one trigger over its persisted `parsed`

@@ -5,7 +5,9 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.GraftTestBus
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Encoder}
 import org.apache.spark.sql.catalyst.expressions.{CaseWhen, Expression, JsonToStructs}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
@@ -61,6 +63,41 @@ class FanoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private def pairs(df: DataFrame): Seq[(String, String)] =
     df.collect().map(r => (r.getString(0), r.getString(1))).toSeq.sorted
+
+  /** Runs one fanout route whose sink collects the replies under a
+    * job-local tag; returns the sorted replies and the number of tasks the
+    * sink's job ran.
+    */
+  private def sinkTasks(route: (DataFrame => Unit) => Unit): (Seq[(String, String)], Int) = {
+    val sc = TestSpark.spark.sparkContext
+    val key = "graft.test.sink"
+    val tag = java.util.UUID.randomUUID().toString
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val tasks = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) == tag)) e.stageIds.foreach(stages.add)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId)) { tasks.incrementAndGet(); () }
+    }
+    var got = Seq.empty[(String, String)]
+    sc.addSparkListener(listener)
+    try {
+      route { replies =>
+        sc.setLocalProperty(key, tag)
+        try got = pairs(replies) finally sc.setLocalProperty(key, null)
+      }
+      GraftTestBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    (got, tasks.get)
+  }
+
+  /** A (key, value) batch of `msgs` in `partitions` partitions, no shuffle. */
+  private def batchOf(msgs: Seq[(String, String)], partitions: Int): DataFrame = {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    spark.sparkContext.parallelize(msgs, partitions).toDF("key", "value")
+  }
 
   test("N rivers see every message off ONE query with one input scan") {
     val spark = TestSpark.spark
@@ -428,6 +465,91 @@ class FanoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         s"a trigger repeated an @id: $triggers")
       assert(triggers.map(_.at).distinct.size == 4, s"a trigger repeated an @opprettet: $triggers")
     } finally q.stop()
+  }
+
+  test("a compiled trigger runs one task per input partition") {
+    // a fast-path river, a variant-path river (dotted key) and a catch-all
+    val rivers = Seq(
+      eventRiver("a"),
+      eventRiver("b").validate(Validation.requireKey("@løsning.x")),
+      River().validate(Validation.requireKey("@event_name")))
+    def reply(i: Int)(r: Routed): DataFrame =
+      r.passed.select(col("key"), concat(lit(s"r$i:"), col("value")).as("value"))
+    val (regs, _) = counted(rivers)(reply)
+    val msgs = Seq("k1" -> """{"@event_name":"a"}""",
+      "k2" -> """{"@event_name":"b","@løsning":{"x":1}}""", "k3" -> """{"@event_name":"b"}""",
+      "k4" -> "{oops", "k5" -> """{"@event_name":"c"}""", "k6" -> """{"@event_name":"a","n":2}""")
+    Seq(1, 3).foreach { partitions =>
+      val batch = batchOf(msgs, partitions)
+      val (got, tasks) = sinkTasks(Fanout.routeBatchUnioned(batch, regs))
+      val want = pairs(rivers.indices.map(j => reply(j)(rivers(j).attach(batch, col("value"))))
+        .reduce(_.unionAll(_)))
+      assert(got == want, s"$partitions partitions: replies differ from the per-river reference")
+      assert(tasks == partitions,
+        s"$partitions partitions: the sink's job ran $tasks tasks for ${rivers.size} rivers")
+    }
+  }
+
+  test("a flow that reads several input partitions per task keeps the union DAG") {
+    // coalesce(1) is narrow but not one-to-one: its one partition reads all
+    // three input partitions, so its branch cannot share their tasks
+    val rivers = Seq(eventRiver("a"), eventRiver("a"),
+      River().validate(Validation.requireKey("@event_name")))
+    def reply(i: Int)(r: Routed): DataFrame = {
+      val passed = if (i == 1) r.passed.coalesce(1) else r.passed
+      passed.select(col("key"), concat(lit(s"r$i:"), col("value")).as("value"))
+    }
+    val (regs, builds) = counted(rivers)(reply)
+    (1 to 3).foreach { t =>
+      val msgs = (1 to 6).map { i =>
+        s"t$t-k$i" -> s"""{"@event_name":"${if (i % 2 == 0) "a" else "b"}"}"""
+      }
+      val (got, tasks) = sinkTasks(Fanout.routeBatchUnioned(batchOf(msgs, 3), regs))
+      val want = rivers.indices.flatMap { j =>
+        msgs.collect { case (k, v) if j == 2 || v.contains("\"a\"") => k -> s"r$j:$v" }
+      }.sorted
+      assert(got == want, s"trigger $t: every reply must arrive exactly once")
+      assert(tasks == 3 + 1 + 3,
+        s"trigger $t: the union DAG runs a task per branch partition, got $tasks")
+    }
+    assert(builds.map(_.get) == rivers.map(_ => 1), "each flow must be built once per query")
+  }
+
+  test("rivers sharing a task draw their own @ids and keep their own routing counts") {
+    // two Republish rivers pass the same messages: their uuid() @ids are
+    // drawn in one task per partition, with the same partition index
+    val rivers = Seq(eventRiver("a"), eventRiver("a"), River().validate(Validation.requireKey("x")))
+    val (regs, _) = counted(rivers) {
+      case 2 => r => r.passed.select(col("key"), col("value"))
+      case _ => r => Republish(r.passed.select(col("key"), col("value")), Nil, "svc", "inst")
+    }
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper
+    val statuses = Seq("passed", "precondition_failed", "validation_failed", "unparseable")
+    val ids = (1 to 3).map { t =>
+      val msgs = (1 to 6).map(i => s"t$t-k$i" -> (i % 3 match {
+        case 0 => """{"@event_name":"b","x":1}"""
+        case 1 => """{"@event_name":"a"}"""
+        case _ => "{oops"
+      }))
+      val batch = batchOf(msgs, 3)
+      var got = Seq.empty[(String, String)]
+      val metrics = Fanout.routeBatchObserved(batch, regs) { r => got = pairs(r) }
+      rivers.zip(metrics).foreach { case (river, (name, m)) =>
+        val own = river.attach(batch, col("value")).all.groupBy("status").count().collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+        assert(m("messages") == msgs.size.toLong, s"trigger $t, $name: $m")
+        statuses.foreach { s =>
+          assert(m(s) == own.getOrElse(s, 0L),
+            s"trigger $t, $name: $s is ${m(s)}, its attach gives $own")
+        }
+      }
+      val republished = got.map(p => mapper.readTree(p._2)).filter(_.has("@id"))
+      assert(republished.size == 2 * msgs.count(_._2.contains("\"a\"")), s"trigger $t: $got")
+      republished.map(_.path("@id").asText())
+    }
+    val all = ids.flatten
+    assert(all.forall(_.nonEmpty) && all.distinct.size == all.size,
+      s"an @id repeated within or across triggers: $ids")
   }
 
   test("a compiled trigger reads current_date() and localtimestamp() off its own instant") {
