@@ -52,21 +52,26 @@ import graft.messages.{River, Routed}
   * then binds its batch into the parse, persists it, binds the persisted
   * parse's RDD to the leaf and hands the sink a frame over the DAG, so the
   * trigger's only driver work is planning that one leaf, and it runs one
-  * job of one task per input partition: each task runs every river's
-  * branch over its partition in turn ([[Fused]]), as the reference hands
-  * each record to every listener in one loop, so the rapid's Kafka sink
-  * writes from one producer task per input partition. A branch that reads
-  * several input partitions per partition of its own (a `coalesce`) keeps
-  * a task per branch partition for the whole union. Otherwise a
-  * foreachBatch body pays the build, analysis, optimization, planning and
-  * code generation of every river's plan on every trigger — the fixed
-  * cost that sets the rapid's reply latency.
+  * job. Otherwise a foreachBatch body pays the build, analysis,
+  * optimization, planning and code generation of every river's plan on
+  * every trigger — the fixed cost that sets the rapid's reply latency.
   * Structured Streaming queries analyze their plan once the same way; a
   * foreachBatch body is outside that machinery, so the fanout does it
   * itself. Per-trigger values stay runtime inputs ([[TriggerInputs]]), and
   * a reply plan with a shuffle, a broadcast or a subquery is planned per
   * trigger instead: a reused shuffle would serve an earlier trigger's map
   * output.
+  *
+  * When the input has at least as many partitions as the cluster has
+  * cores, a trigger's job runs one task per input partition: each task
+  * runs every river's branch over its partition in turn ([[Fused]]), as
+  * the reference hands each record to every listener in one loop, so the
+  * rapid's Kafka sink writes from one producer task per input partition.
+  * Over fewer partitions, or when a branch reads several input partitions
+  * per partition of its own (a `coalesce`), the job runs a task per branch
+  * partition, so the branches of one input partition run side by side. A
+  * fused task runs its partition's rivers one after another, so one
+  * oversized input partition holds every river's work for it on one core.
   *
   * Error semantics come free: any river's flow throwing inside foreachBatch
   * fails THE query, which is the reference's one-dead-listener-stops-the-app
@@ -89,7 +94,8 @@ object Fanout {
     * over a placeholder of the micro-batch, and its plan — analyzed,
     * optimized and compiled once — then serves every trigger, in one job
     * of one task per input partition that runs every river's flow over
-    * that partition (unless a flow reads across partitions). So a flow
+    * that partition (over fewer input partitions than cores, or when a
+    * flow reads across partitions, a task per flow partition). So a flow
     * must build its reply from its routed input alone: an action inside a
     * flow (collect, count, an `Observation` of its own) is unsupported, and
     * values a flow computes in Scala when it runs are fixed for the query's
@@ -115,8 +121,9 @@ object Fanout {
     * (it reads the trigger's persisted parse): a single Spark job shares
     * the persisted parse across every river's plan, and — on Kafka — ONE
     * producer write per trigger instead of R sequential writes. The frame
-    * promises no row order; a compiled trigger's replies come partition by
-    * partition, each partition's in registration order. The persist
+    * promises no row order: a fused trigger's replies come partition by
+    * partition, each partition's in registration order, an unfused one's
+    * river by river. The persist
     * is scoped to the batch: released before the micro-batch commits, so
     * state never accumulates across triggers. Any river's branch failing
     * fails the one action, downing the query. No-op when no rivers are
@@ -206,8 +213,8 @@ object Fanout {
     * ([[Template.run]] checks). The
     * binding is part of the RDD, so a job's tasks carry the input it was
     * submitted with. When every branch of the reply union reaches the leaf
-    * one-to-one, one task per input partition reads partition i once for
-    * each branch ([[Fused]]).
+    * one-to-one and the input fills the cores, one task per input partition
+    * reads partition i once for each branch ([[Fused]]).
     */
   private final class Leaf(sc: SparkContext, partitions: Int) extends RDD[InternalRow](sc, Nil) {
     @volatile private var input: RDD[InternalRow] = _
@@ -239,8 +246,9 @@ object Fanout {
     * partition i iterates partition i of the first branch, then of the
     * second, and so on, lazily. Sound only when every branch reaches the
     * [[Leaf]] through one-to-one dependencies alone, so that branch k's
-    * partition i reads input partition i ([[Template]] checks);
-    * `UnionRDD` runs each branch's partitions as tasks of their own.
+    * partition i reads input partition i ([[Template]] checks), and worth
+    * it only when the input partitions fill the cores: `UnionRDD` runs
+    * each branch's partitions as tasks of their own.
     */
   private final class Fused(sc: SparkContext, branches: Seq[RDD[InternalRow]])
       extends RDD[InternalRow](sc, branches.map(new OneToOneDependency(_))) {
@@ -313,13 +321,19 @@ object Fanout {
       if (shuffles) None else Some(new Compiled(leaf, executed, dag(qe, leaf)))
     }
 
-    /** The RDD of `qe`'s executed plan: one task per input partition when
-      * the plan is a union whose every branch reads the leaf one-to-one
-      * ([[Fused]]), `qe.toRdd` otherwise (a branch over a `CoalescedRDD`,
-      * say, reads several input partitions per task). Wrapped as `toRdd`
-      * wraps it, so the tasks run under the session's SQL confs.
+    /** The RDD of `qe`'s executed plan. A union whose every branch reads
+      * the leaf one-to-one runs as one task per input partition ([[Fused]])
+      * when the input has at least as many partitions as the cluster has
+      * cores (`defaultParallelism`): a fused task runs its partition's
+      * branches one after another, so over fewer partitions the union's
+      * task per branch partition keeps more cores busy. A branch over a
+      * `CoalescedRDD`, say, reads several input partitions per task and is
+      * never fused. Either way the RDD is wrapped as `toRdd` wraps it, so
+      * the tasks run under the session's SQL confs; an unfused union is
+      * `sparkContext.union` of the branches, the rows `UnionExec` builds.
       */
     private def dag(qe: QueryExecution, leaf: Leaf): RDD[InternalRow] = {
+      val sc = session.sparkContext
       def oneToOne(rdd: RDD[_]): Boolean = (rdd eq leaf) || rdd.dependencies.nonEmpty &&
         rdd.dependencies.forall {
           case d: OneToOneDependency[_] => oneToOne(d.rdd)
@@ -328,9 +342,9 @@ object Fanout {
       qe.executedPlan match {
         case u: UnionExec =>
           val branches = u.children.map(_.execute())
-          if (branches.forall(oneToOne)) new SQLExecutionRDD(
-            new Fused(session.sparkContext, branches), qe.sparkSession.sessionState.conf)
-          else qe.toRdd
+          val fuse = leaf.getNumPartitions >= sc.defaultParallelism && branches.forall(oneToOne)
+          new SQLExecutionRDD(if (fuse) new Fused(sc, branches) else sc.union(branches),
+            qe.sparkSession.sessionState.conf)
         case _ => qe.toRdd
       }
     }

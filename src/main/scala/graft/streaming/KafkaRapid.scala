@@ -155,15 +155,17 @@ final class KafkaRapid(spark: SparkSession, config: KafkaRapidConfig) {
     *
     * Each flow is a plan builder and runs once per query: the first trigger
     * builds, analyzes, plans and code-generates every river plan, and later
-    * triggers bind their persisted parse into it and run one job of one
-    * task per input partition, each task running every river's plan over
-    * its partition, so the Kafka sink writes from one producer task per
-    * input partition ([[Fanout.Registration]]). The trigger's seed and
-    * time are runtime inputs of that plan, so reply `@id` uuids and
-    * `@opprettet` stamps are fresh on every trigger; a river plan with a
-    * shuffle is planned per trigger. Actions inside a flow are unsupported,
-    * and SQL confs are fixed at query start, as for any streaming query
-    * definition.
+    * triggers bind their persisted parse into it and run one job. When the
+    * trigger has at least as many input partitions as the cluster has
+    * cores, that job runs one task per input partition, each task running
+    * every river's plan over its partition, so the Kafka sink writes from
+    * one producer task per input partition; over fewer partitions it runs
+    * a task per river plan partition ([[Fanout.Registration]]). The
+    * trigger's seed and time are runtime inputs of that plan, so reply
+    * `@id` uuids and `@opprettet` stamps are fresh on every trigger; a
+    * river plan with a shuffle is planned per trigger. Actions inside a
+    * flow are unsupported, and SQL confs are fixed at query start, as for
+    * any streaming query definition.
     */
   def run(regs: Seq[Fanout.Registration]): org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream

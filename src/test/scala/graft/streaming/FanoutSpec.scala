@@ -467,7 +467,7 @@ class FanoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     } finally q.stop()
   }
 
-  test("a compiled trigger runs one task per input partition") {
+  test("a compiled trigger runs one task per input partition once they fill the cores") {
     // a fast-path river, a variant-path river (dotted key) and a catch-all
     val rivers = Seq(
       eventRiver("a"),
@@ -479,20 +479,27 @@ class FanoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val msgs = Seq("k1" -> """{"@event_name":"a"}""",
       "k2" -> """{"@event_name":"b","@løsning":{"x":1}}""", "k3" -> """{"@event_name":"b"}""",
       "k4" -> "{oops", "k5" -> """{"@event_name":"c"}""", "k6" -> """{"@event_name":"a","n":2}""")
-    Seq(1, 3).foreach { partitions =>
-      val batch = batchOf(msgs, partitions)
-      val (got, tasks) = sinkTasks(Fanout.routeBatchUnioned(batch, regs))
-      val want = pairs(rivers.indices.map(j => reply(j)(rivers(j).attach(batch, col("value"))))
-        .reduce(_.unionAll(_)))
-      assert(got == want, s"$partitions partitions: replies differ from the per-river reference")
-      assert(tasks == partitions,
-        s"$partitions partitions: the sink's job ran $tasks tasks for ${rivers.size} rivers")
-    }
+    // fewer input partitions than cores keep a task per river partition,
+    // so the rivers of one partition still run side by side
+    val cores = TestSpark.spark.sparkContext.defaultParallelism
+    Seq(1 -> rivers.size, cores - 1 -> rivers.size, cores -> 1, cores + 2 -> 1)
+      .foreach { case (partitions, perPartition) =>
+        val batch = batchOf(msgs, partitions)
+        val (got, tasks) = sinkTasks(Fanout.routeBatchUnioned(batch, regs))
+        val want = pairs(rivers.indices.map(j => reply(j)(rivers(j).attach(batch, col("value"))))
+          .reduce(_.unionAll(_)))
+        assert(got == want, s"$partitions partitions: replies differ from the per-river reference")
+        assert(tasks == partitions * perPartition,
+          s"$partitions partitions on $cores cores: the sink's job ran $tasks tasks for " +
+            s"${rivers.size} rivers")
+      }
   }
 
   test("a flow that reads several input partitions per task keeps the union DAG") {
-    // coalesce(1) is narrow but not one-to-one: its one partition reads all
-    // three input partitions, so its branch cannot share their tasks
+    // coalesce(1) is narrow but not one-to-one: its one partition reads
+    // every input partition, so its branch cannot share their tasks, even
+    // on an input that fills the cores
+    val cores = TestSpark.spark.sparkContext.defaultParallelism
     val rivers = Seq(eventRiver("a"), eventRiver("a"),
       River().validate(Validation.requireKey("@event_name")))
     def reply(i: Int)(r: Routed): DataFrame = {
@@ -504,12 +511,12 @@ class FanoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       val msgs = (1 to 6).map { i =>
         s"t$t-k$i" -> s"""{"@event_name":"${if (i % 2 == 0) "a" else "b"}"}"""
       }
-      val (got, tasks) = sinkTasks(Fanout.routeBatchUnioned(batchOf(msgs, 3), regs))
+      val (got, tasks) = sinkTasks(Fanout.routeBatchUnioned(batchOf(msgs, cores), regs))
       val want = rivers.indices.flatMap { j =>
         msgs.collect { case (k, v) if j == 2 || v.contains("\"a\"") => k -> s"r$j:$v" }
       }.sorted
       assert(got == want, s"trigger $t: every reply must arrive exactly once")
-      assert(tasks == 3 + 1 + 3,
+      assert(tasks == cores + 1 + cores,
         s"trigger $t: the union DAG runs a task per branch partition, got $tasks")
     }
     assert(builds.map(_.get) == rivers.map(_ => 1), "each flow must be built once per query")
@@ -518,6 +525,7 @@ class FanoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   test("rivers sharing a task draw their own @ids and keep their own routing counts") {
     // two Republish rivers pass the same messages: their uuid() @ids are
     // drawn in one task per partition, with the same partition index
+    val cores = TestSpark.spark.sparkContext.defaultParallelism
     val rivers = Seq(eventRiver("a"), eventRiver("a"), River().validate(Validation.requireKey("x")))
     val (regs, _) = counted(rivers) {
       case 2 => r => r.passed.select(col("key"), col("value"))
@@ -531,7 +539,7 @@ class FanoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         case 1 => """{"@event_name":"a"}"""
         case _ => "{oops"
       }))
-      val batch = batchOf(msgs, 3)
+      val batch = batchOf(msgs, cores)
       var got = Seq.empty[(String, String)]
       val metrics = Fanout.routeBatchObserved(batch, regs) { r => got = pairs(r) }
       rivers.zip(metrics).foreach { case (river, (name, m)) =>
